@@ -97,20 +97,31 @@ object Bench {
     // min makes a contiguous stall unable to fabricate structural movers,
     // for ~1× extra wall on an already-warm JVM. Both reps land in the file
     // artifact so the delta itself is evidence of in-run noise.
-    val results = SparkEntry.queries.map { case (name, fn) =>
+    // A query that throws is a failure, not a fast time: it is listed in
+    // `failed`, kept out of `queries` and `total`, and makes the run exit
+    // non-zero.
+    val failed = scala.collection.mutable.ListBuffer[String]()
+    val results = SparkEntry.queries.flatMap { case (name, fn) =>
       def rep(): (Double, (Double, Double, Double)) = {
         val (t1, g1, d1) = (probeTaskMs.get, probeGcMs.get, drvGcMs)
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        fn(spark, sfDir).count()
         val sec = (System.nanoTime() - t0) / 1e9
         (sec, ((probeTaskMs.get - t1) / 1e3, (probeGcMs.get - g1) / 1e3,
           (drvGcMs - d1) / 1e3))
       }
-      val (s1, p1) = rep()
-      val (s2, p2) = rep()
-      reps(name) = (s1, s2)
-      probe(name) = if (s1 <= s2) p1 else p2
-      name -> math.min(s1, s2)
+      try {
+        val (s1, p1) = rep()
+        val (s2, p2) = rep()
+        reps(name) = (s1, s2)
+        probe(name) = if (s1 <= s2) p1 else p2
+        Some(name -> math.min(s1, s2))
+      } catch {
+        case e: Throwable =>
+          failed += name
+          System.err.println(s"[bench] $name failed: $e")
+          None
+      }
     }
     val tsEnd = java.time.Instant.now().toString
     val loadEnd = load1
@@ -176,7 +187,7 @@ object Bench {
     // excess over the best rep on whichever family member ran first.
     // Record that excess per memo query (and its sum) so totals can be
     // stated with and without the memoized accounting.
-    val memoFirstPay = memoClass.map { n =>
+    val memoFirstPay = memoClass.filter(reps.contains).map { n =>
       val (a, b) = reps(n); n -> math.max(0.0, a - b)
     }.filter(_._2 > 0.0)
     val memoFirstPayTotal = memoFirstPay.map(_._2).sum
@@ -187,7 +198,8 @@ object Bench {
       s""""write_class":${writeClass.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""memo_class":${memoClass.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""memo_first_pay_s":${memoFirstPay.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")},""" +
-      s""""memo_first_pay_total_s":${f(memoFirstPayTotal)}}"""
+      s""""memo_first_pay_total_s":${f(memoFirstPayTotal)},""" +
+      s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     val line = s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","meta":$meta}"""
     println(line)
     // The driver records only the TAIL of stdout (~2000 chars), so the
@@ -201,6 +213,7 @@ object Bench {
       s""""n":${results.size},"sf":"$sfDir","cpus":$cpus,""" +
       s""""steal_pct":${f(stealPct)},"load1_start":${f(loadStart)},""" +
       s""""load1_end":${f(loadEnd)},"memo_first_pay_total_s":${f(memoFirstPayTotal)},""" +
+      s""""n_failed":${failed.size},""" +
       s""""full_artifact":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")}"}""")
     // The driver records only the TAIL of stdout, which truncated the
     // per-query map in BENCH_r0{1..4}.json and blocked per-query diffing
@@ -244,5 +257,9 @@ object Bench {
       (fileLine + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

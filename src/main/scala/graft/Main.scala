@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *
   * `search` delegates to [[Search.keywordSearch]] (ts bounds push down to
   * parquet row-group stats; contains() runs in whole-stage codegen).
-  * `report` runs a canned operational readout over the corpus views:
+  * `report` runs a canned operational readout over the events table:
   *
   *   - top-talkers:  noisiest users by event volume + exact decimal sum
   *   - error-bursts: the minutes with the most error events (burst triage)
@@ -32,9 +32,13 @@ object Main {
 
   /** Build the result for parsed args — separated from main so MainSpec
     * can drive the CLI end-to-end without forking a JVM or stopping the
-    * shared session. */
+    * shared session. Each command does only the catalog work it needs:
+    * `sql` (re-)registers the corpus views, which re-creates only views
+    * whose files changed ([[Search.registerViews]]); `search` and
+    * `report` read the tables directly. Loads reuse the footer-schema
+    * memo in [[Tables]], so a repeat request over an unchanged corpus
+    * submits no schema-inference jobs. */
   def run(spark: SparkSession, sfDir: String, args: Seq[String]): DataFrame = {
-    Search.registerViews(spark, sfDir)
     val opts = args.drop(args.indexWhere(_.startsWith("--")) match {
       case -1 => args.length; case i => i
     }).sliding(2, 2).collect {
@@ -46,8 +50,10 @@ object Main {
         Search.keywordSearch(spark, sfDir, pattern,
           table = opts.getOrElse("type", "events"),
           from = opts.get("from"), to = opts.get("to"), limit = limit)
-      case "report" :: name :: _ => report(spark, name, limit)
-      case "sql" :: q :: _ => spark.sql(q)
+      case "report" :: name :: _ => report(spark, sfDir, name, limit)
+      case "sql" :: q :: _ =>
+        Search.registerViews(spark, sfDir)
+        spark.sql(q)
       case other => sys.error(
         s"""unknown command: ${other.mkString(" ")}
            |usage: <sfDir> search <pattern> [--from ts] [--to ts] [--type events|documents] [--limit N]
@@ -114,8 +120,8 @@ object Main {
     }
   }
 
-  private def report(s: SparkSession, name: String, limit: Int): DataFrame = {
-    val events = s.table("events")
+  private def report(s: SparkSession, sfDir: String, name: String, limit: Int): DataFrame = {
+    val events = Tables.events(s, sfDir)
     name match {
       case "top-talkers" =>
         events.groupBy("user_id")

@@ -31,7 +31,14 @@ import org.apache.spark.sql.functions._
 object Search {
 
   /** Register every corpus table as a temp view so SQL mode (and any
-    * downstream REPL) sees one coherent database. */
+    * downstream REPL) sees one coherent database. Idempotent and cheap
+    * to repeat: a view is re-created only when the files it scans are no
+    * longer exactly the files at its table path — the files changed
+    * (a rewrite moves a length or mtime), `sf` is another directory, or
+    * the view was dropped or replaced by one over other files. The check
+    * is one local listing per table ([[Tables.fingerprint]] against the
+    * listing the view's scan kept), so callers may invoke this on every
+    * request and still see the latest files. */
   def registerViews(s: SparkSession, sf: String): Unit = {
     val loaders: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "region" -> Tables.region, "nation" -> Tables.nation,
@@ -39,7 +46,11 @@ object Search {
       "part" -> Tables.part, "orders" -> Tables.orders,
       "lineitem" -> Tables.lineitem, "documents" -> Tables.documents,
       "embeddings" -> Tables.embeddings, "events" -> Tables.events)
-    loaders.foreach { case (n, l) => l(s, sf).createOrReplaceTempView(n) }
+    loaders.foreach { case (n, l) =>
+      val current = s.catalog.tableExists(n) &&
+        Tables.scannedFingerprint(s.table(n)) == Tables.fingerprint(s, sf, n)
+      if (!current) l(s, sf).createOrReplaceTempView(n)
+    }
   }
 
   /** Read a parquet directory that a concurrent `StreamOps.upsertBatch`

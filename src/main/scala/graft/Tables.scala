@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -13,6 +15,13 @@ import org.apache.spark.storage.StorageLevel
   * filters/projections in the query layer push down to the parquet scan
   * (verify `PushedFilters` in `.explain`), so the same plans run unchanged on
   * a multi-executor cluster over 100 TB.
+  *
+  * Catalog work stays off repeat loads: every load lists its table path
+  * into a [[Fingerprint]] — (path, length, mtime) of each data file — and
+  * reads with the schema Spark inferred the last time it saw exactly
+  * those files (the footer-schema memo, keyed on session conf and path).
+  * An unchanged corpus therefore costs one local listing per load and no
+  * Spark job; a rewritten file is re-inferred on its next load.
   */
 object Tables {
   private def p(sfDir: String, name: String) = s"$sfDir/$name.parquet"
@@ -72,7 +81,12 @@ object Tables {
     else df
 
   private def load(s: SparkSession, sf: String, name: String): DataFrame = {
-    def mk = s.read.parquet(p(sf, name))
+    def mk = footerSchema(s, p(sf, name)) match {
+      case Some(schema) => s.read.schema(schema).parquet(p(sf, name))
+      // inference rejected the footer: re-read unpinned so the caller
+      // sees Spark's own error
+      case None => s.read.parquet(p(sf, name))
+    }
     if (!cacheTables) mk
     else scanCache.computeIfAbsent(
       (System.identityHashCode(s), sf, name), _ => cachePrep(s, name, mk).persist(StorageLevel.MEMORY_AND_DISK))
@@ -110,27 +124,102 @@ object Tables {
   def documentsPar(s: SparkSession, sf: String): DataFrame =
     documents(s, sf).repartition(s.sparkContext.defaultParallelism)
 
+  /** (path, length, mtime) of every data file under a table path, sorted
+    * by path — the identity of the input a schema, view or codebook was
+    * derived from. A table path may be one file or a directory tree (the
+    * multi-file and partitioned layouts); names Spark's file index skips
+    * (`_SUCCESS`, `.crc`, `_temporary/`) are skipped here too. mtime has
+    * millisecond resolution, so only a same-length rewrite within the
+    * same millisecond goes unseen. A missing path throws
+    * (FileNotFoundException), so nothing is memoized for it. */
+  type Fingerprint = Seq[(String, Long, Long)]
+
+  def fingerprint(s: SparkSession, sf: String, name: String): Fingerprint =
+    fingerprintAt(s, p(sf, name))
+
+  private def fingerprintAt(s: SparkSession, path: String): Fingerprint = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val rootDepth = fs.makeQualified(root).depth()
+    val it = fs.listFiles(root, true)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      // every component below the root, the file name included
+      val below = Iterator.iterate(f.getPath)(_.getParent)
+        .take(f.getPath.depth() - rootDepth).map(_.getName)
+      if (!below.exists(hiddenName))
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    files.result().sortBy(_._1)
+  }
+
+  private def hiddenName(n: String): Boolean =
+    (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+
+  /** The files `df`'s file scans listed when it was built, in
+    * [[Fingerprint]] form. A DataFrame keeps its listing, so this equals
+    * [[fingerprint]] of its path until the files there change. */
+  def scannedFingerprint(df: DataFrame): Fingerprint =
+    df.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation
+    }.flatMap {
+      case r: HadoopFsRelation => r.location match {
+        case i: PartitioningAwareFileIndex =>
+          i.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        // an index that keeps no listing can never prove the files unchanged
+        case other => Seq((other.toString, -1L, -1L))
+      }
+      case _ => Nil
+    }.sortBy(_._1)
+
+  /** Footer-schema memo: per (session SQL conf, table path), the
+    * [[Fingerprint]] last seen there and what Spark's parquet schema
+    * inference made of it — `Some(schema)`, or `None` when inference
+    * rejected TIMESTAMP(NANOS) (the original events corpus). Inference is
+    * a Spark job per read, so loads over unchanged files skip it and read
+    * with `.schema(memoized)`: the schema is the one Spark inferred, so
+    * column types are exactly what an unpinned read gives (`orders` is
+    * timestamp[us] at sf0.1 but timestamp[ms] in the tiny corpora). The
+    * key holds the session's `spark.sql.*` conf because inference reads
+    * it (binaryAsString, int96AsTimestamp, inferTimestampNTZ, nanosAsLong
+    * …); sessions with equal SQL conf share entries, also across
+    * SparkContexts (whose app ids differ) in one JVM. An entry is replaced as soon
+    * as the files at its path change — an in-place rewrite changes a
+    * length or mtime — so the memo never serves a stale verdict and
+    * holds one entry per (conf, path). */
+  private val footerMemo = new java.util.concurrent.ConcurrentHashMap[
+    (Map[String, String], String), (Fingerprint, Option[StructType])]()
+
+  private def footerSchema(s: SparkSession, path: String): Option[StructType] = {
+    // fingerprint BEFORE inferring: a rewrite racing the inference leaves
+    // the entry under the old fingerprint, which the next load's listing
+    // no longer matches
+    val fp = fingerprintAt(s, path)
+    val key = (s.conf.getAll.filter(_._1.startsWith("spark.sql.")), path)
+    val hit = footerMemo.get(key)
+    if (hit != null && hit._1 == fp) hit._2
+    else {
+      // Only the NANOS-rejection error class means "nanos corpus";
+      // anything else (permissions, transient IO) surfaces to the caller
+      // and is not memoized, so the next load retries.
+      val v = try Some(s.read.parquet(path).schema)
+        catch { case e: Throwable if isNanosRejection(e) => None }
+      footerMemo.put(key, (fp, v))
+      v
+    }
+  }
+
   /** Whether `events.parquet` under `sfDir` stores `ts` as parquet
     * TIMESTAMP(NANOS) (the original driver corpus) or as a Spark-readable
-    * TIMESTAMP (micros — the corpus as regenerated after round 5).
-    * Detected once per directory from the footer: Spark 4's schema
-    * inference throws [PARQUET_TYPE_ILLEGAL] on NANOS and reads micros
-    * natively. Keyed by path (not session) — the unit is a property of
-    * the file, and one footer probe per directory amortizes across all
-    * queries. Supporting BOTH units keeps every query correct no matter
-    * which generator wrote the corpus a given round. */
-  private val tsNanosCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+    * TIMESTAMP (micros — the corpus as regenerated after round 5). Read
+    * from the footer memo: Spark 4's schema inference throws
+    * [PARQUET_TYPE_ILLEGAL] on NANOS and reads micros natively, and the
+    * verdict is re-taken whenever the file is rewritten. Supporting BOTH
+    * units keeps every query correct no matter which generator wrote the
+    * corpus a given round. */
   private def eventsTsIsNanos(s: SparkSession, sf: String): Boolean =
-    // Only the NANOS-rejection error class means "nanos corpus"; anything
-    // else (missing dir, permissions, transient IO) must surface to the
-    // caller, not be cached as a unit verdict. computeIfAbsent caches
-    // nothing when the probe throws, so a transient failure retries.
-    tsNanosCache.computeIfAbsent(p(sf, "events"), path =>
-      try { s.read.parquet(path).schema; false }
-      catch {
-        case e: Throwable if isNanosRejection(e) => true
-      })
+    footerSchema(s, p(sf, "events")).isEmpty
 
   /** True iff the exception (or any cause in its chain — footer reads can
     * run as a Spark job, wrapping the real error) is Spark 4's
