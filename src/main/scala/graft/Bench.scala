@@ -3,31 +3,16 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.envCpus
     // Share one in-memory scan per table across the ~200 queries (see
     // Tables scaladoc): the bench's unit of work is the query mix, and
     // re-decoding the same immutable parquet 200× is per-query fixed
     // overhead, not query cost. Verify and the specs do NOT set this —
     // the graded correctness path keeps the true parquet-scan plans.
     sys.props("graft.cache.tables") = "1"
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.cteRecursionRowLimit", "50000000")
-      // Reclaim reliable loop-checkpoint files as their RDDs are GC'd
-      // (static conf — must be set before the context; see Ckpt scaladoc).
-      .config(Ckpt.CleanerKey, "true")
-      .config("spark.ui.enabled", "false")
-    // A/B experiment hook (r15, mirrors QTime): semicolon-separated k=v
-    // session confs. Unset in the driver's runs — the locked bench
-    // session conf is unchanged unless an experiment opts in.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
-      s.split(";").filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_EXTRA_CONF: the A/B experiment hook; unset, the bench
+    // runs the standard session conf.
+    val spark = GraftSession.local(cpus, GraftSession.envExtraConf)
     // Untimed warmup: JIT + codegen + parquet-reader init otherwise land on
     // whichever query happens to run first, skewing its number (BASELINE.md
     // protocol). Round 1 warmed only the flagship; that leaves each query's

@@ -26,8 +26,8 @@ import org.apache.spark.sql.Dataset
   * Checkpoint GARBAGE: reliable checkpoint files outlive the RDDs that
   * wrote them unless `spark.cleaner.referenceTracking.cleanCheckpoints`
   * is `true` (a STATIC conf, read at SparkContext construction — it
-  * cannot be flipped here). Our own entry points (`Bench`, `Verify`,
-  * `Main`, stream harnesses) set it in their builders, so iterative
+  * cannot be flipped here). [[GraftSession.local]], which builds every
+  * session graft's own entry points and tests use, sets it, so iterative
   * rounds' state is reclaimed as the per-round Datasets are GC'd on the
   * driver; a deployer embedding this library with their own session must
   * set it too (or point `spark.graft.checkpointDir` at a TTL'd/scratch
@@ -41,7 +41,7 @@ import org.apache.spark.sql.Dataset
 object Ckpt {
   val ConfKey = "spark.graft.checkpointDir"
 
-  /** Static conf our entry points enable so reliable checkpoint files are
+  /** Static conf [[GraftSession]] enables so reliable checkpoint files are
     * cleaned when their RDDs are GC'd (see scaladoc above). */
   val CleanerKey = "spark.cleaner.referenceTracking.cleanCheckpoints"
 

@@ -159,18 +159,7 @@ object Main {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(sys.error(
       "usage: Main <sfDir> search|report|sql ..."))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.cteRecursionRowLimit", "50000000")
-      // Reclaim reliable loop-checkpoint files as their RDDs are GC'd
-      // (static conf — must be set before the context; see Ckpt scaladoc).
-      .config(Ckpt.CleanerKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
     args.drop(1).toList match {
       case "follow" :: dir :: rest =>
         val (alerts, forSec) = parseFollowArgs(rest)

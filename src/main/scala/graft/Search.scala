@@ -154,17 +154,7 @@ object Search {
     val opts = args.drop(1).sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Reclaim reliable loop-checkpoint files as their RDDs are GC'd
-      // (static conf — must be set before the context; see Ckpt scaladoc).
-      .config(Ckpt.CleanerKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
     registerViews(spark, sfDir)
     // --serving <dir>: also expose a live serving table (see
     // registerServing) as `daily_counts` for SQL mode

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.GraftFunctions
 import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §0.1/§2.
@@ -16,13 +17,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_agg_pricing_summary")(spark, "/root/testdata/sf0.001")
 
+  /** Every entry first installs graft into the caller's session
+    * ([[GraftFunctions.register]], idempotent), so a session built
+    * anywhere — not only by [[GraftSession]] — resolves graft's functions
+    * and plans with its rule and strategy whichever query runs first. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ScanOps.queries ++ FilterOps.queries ++ JoinOps.queries ++ AggOps.queries ++
+    (ScanOps.queries ++ FilterOps.queries ++ JoinOps.queries ++ AggOps.queries ++
       WindowOps.queries ++ SortOps.queries ++ SetOps.queries ++ FnOps.queries ++
       TextOps.queries ++ VectorOps.queries ++ UdfOps.queries ++
       ReshapeOps.queries ++ PipelineOps.queries ++ QualityOps.queries ++
       CanaryOps.queries ++ EvalOps.queries ++ TpchOps.queries ++
-      graft.multimodal.Multimodal.queries ++ graft.multimodal.MediaCodecs.queries
+      graft.multimodal.Multimodal.queries ++ graft.multimodal.MediaCodecs.queries)
+      .map { case (name, fn) =>
+        name -> ((s: SparkSession, sf: String) => { GraftFunctions.register(s); fn(s, sf) })
+      }
 
   def oracleSql: Map[String, String] =
     ScanOps.oracle ++ FilterOps.oracle ++ JoinOps.oracle ++ AggOps.oracle ++

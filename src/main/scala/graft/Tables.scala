@@ -69,8 +69,7 @@ object Tables {
   private val splitCached = Set("customer", "supplier", "part", "orders",
     "lineitem", "events", "eventsRaw", "documents", "embeddings")
   private def cachePrep(s: SparkSession, name: String, df: DataFrame): DataFrame =
-    if (splitCached(name) && !sys.props.get("graft.cache.nosplit").contains("1")
-        && !sys.env.get("SPARK_GRAFT_CACHE_NOSPLIT").contains("1"))
+    if (splitCached(name))
       // Capped at 8: the split exists to stop a one-file table from
       // pinning every scan to one core, and 8 ways buys almost all of
       // that win at this corpus size — while splitting to 32 was

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     // Optional third arg (local dev only; driver passes two): regex over
     // query names — run just the matching subset for fast iteration.
     val nameFilter = args.lift(2).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Runaway-recursion brake, sized per deployment (~40× sf1
-      // headroom for q_recursive_cte) — harness-managed, never
-      // mutated inside a query (round-11 judge item 2).
-      .config("spark.sql.cteRecursionRowLimit", "50000000")
-      // Reclaim reliable loop-checkpoint files as their RDDs are GC'd
-      // (static conf — must be set before the context; see Ckpt scaladoc).
-      .config(Ckpt.CleanerKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries.filter { case (name, _) =>
       nameFilter.forall(_.findFirstIn(name).isDefined)

@@ -1,17 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{GraftBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Engine extension point (SURVEY §2 T12 / §4.3): custom Catalyst functions
   * injected via `SparkSessionExtensions`.
   *
-  * Production path: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * (or `.withExtensions` on the builder). For sessions created before the
-  * conf could be applied, `GraftFunctions.register(spark)` installs the same
-  * builders into the live registry — the query layer calls it defensively so
-  * `vec_dot` is always resolvable.
+  * Cluster path: `--conf spark.sql.extensions=graft.functions.GraftExtensions`,
+  * which also brings the `ASOF JOIN` parser and resolution rule
+  * (AsofSqlSpec, PropertySpec). Live sessions get the functions, the
+  * optimizer rule and the planner strategy from `GraftFunctions.register`,
+  * called in exactly three places: [[graft.GraftSession.local]] (every
+  * session graft builds), [[graft.SparkEntry.queries]] (each entry, for
+  * sessions built elsewhere) and [[graft.plans.AsOf.join]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -69,8 +71,11 @@ object GraftFunctions {
     new ExpressionInfo(classOf[graft.plans.AsofTie].getName, "asof_tie"),
     asofTieBuilder _)
 
-  /** Idempotent registration into an already-running session. */
+  /** The one idempotent install into a live session: the four functions,
+    * the Levenshtein band rewrite and the as-of join strategy. */
   def register(spark: SparkSession): Unit = {
+    GraftBridge.addOptimization(spark, graft.plans.LevenshteinBandRule)
+    GraftBridge.addStrategy(spark, graft.plans.AsOfJoinStrategy)
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction("vec_dot", builder, "built-in")
     spark.sessionState.functionRegistry

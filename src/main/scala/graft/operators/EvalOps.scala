@@ -430,14 +430,16 @@ object EvalOps {
       |sc AS (SELECT doc_id, y, s_en, stot FROM eval_base),""".stripMargin
 
   /** Build (once per session+sf) the per-doc prediction base — the full
-    * pipeline joined to one row per held-out doc — and checkpoint it. */
-  private val memo = scala.collection.concurrent.TrieMap[String, DataFrame]()
+    * pipeline joined to one row per held-out doc — and checkpoint it.
+    * Keyed on the session itself: `run` registers the memoized frame as a
+    * temp view, which lands in the frame's own session, so a frame built
+    * by another session on the same context would be invisible here. */
+  private val memo = scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
   private def base(s: SparkSession, sf: String): DataFrame =
-    memo.getOrElseUpdate(s.sparkContext.applicationId + "|" + sf, {
+    memo.getOrElseUpdate((s, sf), {
       // documentsPar: the trigram Generate is compute-bound on one input
       // split — same rationale as q_text_langid_ngram (TextOps).
       Tables.documentsPar(s, sf).createOrReplaceTempView("documents")
-      graft.functions.GraftFunctions.register(s)
       val full = ctes(
         grams = "array_distinct(char_ngrams(lower(text), 3))",
         un = "explode(gs)",
@@ -468,11 +470,10 @@ object EvalOps {
   /** Build (once per session+sf) the top-20 ranking base and checkpoint
     * it — the eval_base discipline: corpus-sized trigram work paid once,
     * the three ranking metrics then reduce ≤ 20·|langs| rows. */
-  private val rankMemo = scala.collection.concurrent.TrieMap[String, DataFrame]()
+  private val rankMemo = scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
   private def rankBase(s: SparkSession, sf: String): DataFrame =
-    rankMemo.getOrElseUpdate(s.sparkContext.applicationId + "|" + sf, {
+    rankMemo.getOrElseUpdate((s, sf), {
       Tables.documentsPar(s, sf).createOrReplaceTempView("documents")
-      graft.functions.GraftFunctions.register(s)
       val full = ctes(
         grams = "array_distinct(char_ngrams(lower(text), 3))",
         un = "explode(gs)",
@@ -513,7 +514,6 @@ object EvalOps {
     }),
     "q_eval_chrf" -> ((s, sf) => {
       Tables.documents(s, sf).createOrReplaceTempView("documents")
-      graft.functions.GraftFunctions.register(s)
       s.sql(chrfGramSql(
         gram = (txt, n) => s"char_ngrams($txt, $n)",
         un = e => s"explode($e)"))

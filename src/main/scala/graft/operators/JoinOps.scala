@@ -368,8 +368,6 @@ object JoinOps {
     // explicitly. Same oracle as q_join_asof_custom — three surfaces, one
     // operator, one fixpoint.
     "q_join_asof_sql" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
-      org.apache.spark.sql.GraftBridge.addStrategy(s, graft.plans.AsOfJoinStrategy)
       eventsTs(s, sf).select("event_id", "user_id", "ts_s")
         .createOrReplaceTempView("asof_e")
       Tables.orders(s, sf).select("o_orderkey", "o_custkey", "o_orderdate")

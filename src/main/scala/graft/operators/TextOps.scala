@@ -511,9 +511,11 @@ object TextOps {
     * every round's state is a vocab-sized eager localCheckpoint, so no
     * stage ever re-derives a prior round. The two driver handoffs (max
     * word length, used-multi-piece count) are single bounded scalars. */
-  private val ugMemo = scala.collection.concurrent.TrieMap[String, UgState]()
+  // keyed on the session itself, like EvalOps.memo: the callers register
+  // the memoized frames as temp views, which land in the frames' session
+  private val ugMemo = scala.collection.concurrent.TrieMap[(SparkSession, String), UgState]()
   private def unigramTrain(s: SparkSession, sf: String): UgState =
-    ugMemo.getOrElseUpdate(s.sparkContext.applicationId + "|" + sf, {
+    ugMemo.getOrElseUpdate((s, sf), {
       import org.apache.spark.sql.functions.{col, length => sqlLength, max => sqlMax}
       val wf = s.sql(ugWfSparkSql).loopCheckpoint()
       wf.createOrReplaceTempView("ug_wf")
@@ -2731,12 +2733,10 @@ object TextOps {
     }),
 
     "q_dedup_editdist" -> ((s, sf) => {
-      // r14 opt: (a) install the band rewrite HERE — before this round it
-      // was only registered by q_fuzzy_source_match, so this query's plan
-      // depended on which query ran first in the session (isolated, the
-      // un-banded O(|a|·|b|) DP measured 262 s at sf0.1/local[32] vs 3.6 s
-      // in the full bench where fuzzy had already installed the rule);
-      // (b) spread the ≤5000-doc sample across cores — the ORDER BY+LIMIT
+      // The plan relies on LevenshteinBandRule, which every
+      // SparkEntry.queries entry installs: the un-banded O(|a|·|b|) DP
+      // measured 262 s at sf0.1/local[32]. r14 opt: spread the
+      // ≤5000-doc sample across cores — the ORDER BY+LIMIT
       // sample lands on ONE partition (TakeOrderedAndProject), so the
       // whole pair stage streamed through a single task (guide §2.5/§2.6:
       // wall ≈ summed task time in the r12 lock). The REPARTITION hint is
@@ -2744,7 +2744,6 @@ object TextOps {
       // parallelism, never a local constant; the relation it spreads is
       // the bounded verification sample, so the exchange is O(5000 rows)
       // at any corpus size. Measured 262 s → 0.7 s isolated (plans/r14).
-      org.apache.spark.sql.GraftBridge.addOptimization(s, graft.plans.LevenshteinBandRule)
       Tables.documents(s, sf).createOrReplaceTempView("documents")
       val p = s.sparkContext.defaultParallelism
       s.sql(editDistSql(idiv = "DIV", hint = s"/*+ REPARTITION($p, doc_id) */"))
@@ -2896,7 +2895,6 @@ object TextOps {
     // sized bitmap (vocabulary ~900 bigrams here — far past the fixed
     // 4-word mask's 256 cap). See nearDupWideEncSpark scaladoc.
     "q_dedup_near_wide" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, sf).createOrReplaceTempView("documents")
       // Materialize the encode stage ONCE: the pair stage reads enc twice
       // (probe explodes the length band, build side doesn't), and Spark
@@ -2932,7 +2930,6 @@ object TextOps {
     // rewrite: the filter is authored as plain `levenshtein(a,b) <= 1` and
     // the rule turns it into band-prefilter + early-exit threshold form.
     "q_fuzzy_source_match" -> ((s, sf) => {
-      org.apache.spark.sql.GraftBridge.addOptimization(s, graft.plans.LevenshteinBandRule)
       Tables.documents(s, sf).select("source").distinct()
         .createOrReplaceTempView("srcs")
       s.sql(
@@ -3353,7 +3350,6 @@ object TextOps {
       // documentsPar: the trigram Generate is compute-bound (µs/row × 1.5M
       // rows) and the corpus is one input split — see Tables.documentsPar.
       Tables.documentsPar(s, sf).createOrReplaceTempView("documents")
-      graft.functions.GraftFunctions.register(s)
       // char_ngrams: custom codegen kernel, identical output to the
       // transform(sequence(...), i -> substring(...)) lambda (parity test
       // in RobustnessSpec) without per-element interpreted dispatch.

@@ -240,7 +240,6 @@ object VectorOps {
     * ANN index family (IVF/PQ/LSH, q_dedup_semantic) three queries over. */
   private def pairBounded(s: SparkSession, sf: String, tau: Double,
                           aName: String, bName: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
     s.sql(pairSql(dot, tau, aName, bName, src = embSampleSub))
   }
@@ -643,7 +642,6 @@ object VectorOps {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_vec_incremental_ivf" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       // the frozen index: 16-row codebook materialized once (lazily —
       // the serve statement's action materializes it, one fewer job)
@@ -653,7 +651,6 @@ object VectorOps {
     }),
 
     "q_vec_norms" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       s.sql(
         s"""WITH x AS (SELECT label, posexplode(embedding) AS (pos, v) FROM embeddings),
@@ -673,20 +670,17 @@ object VectorOps {
     }),
 
     "q_vec_knn_cosine" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       s.sql(knnSparkSql)
     }),
 
     "q_vec_knn_join" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       s.sql(knnJoinSql((a, b) =>
         s"${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)}))"))
     }),
 
     "q_vec_mmr_diversify" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       // The only corpus-sized work is the pool statement (one linear
       // relevance scan, TakeOrdered 20). The greedy argmax chain is
@@ -759,7 +753,6 @@ object VectorOps {
     // The DuckDB oracle states the unpruned all-pairs form, so the gate
     // proves the prune exact.
     "q_text_contamination_emb" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       val d2 = (u: String, c: String) =>
         s"(vec_dot($u, $u) - 2 * vec_dot($u, $c) + vec_dot($c, $c))"
@@ -804,21 +797,18 @@ object VectorOps {
     }),
 
     "q_vec_ann_lsh_native" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       s.sql(lshSql(dot,
         signs => s"CAST(array(${signs.mkString(", ")}) AS ARRAY<FLOAT>)"))
     }),
 
     "q_vec_ann_ivf" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       ivfPrep(s, sf)
       s.sql(ivfServeSparkSql)
     }),
 
     "q_vec_cluster_purity" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       ivfPrep(s, sf)
       s.sql(s"""WITH asgn AS (${sparkArgmin("ivf_cent",
@@ -876,7 +866,6 @@ object VectorOps {
     // the corpus once for distances. Oracle states the identical ordered
     // dot (odot), so the kernel is hash-proven against DuckDB.
     "q_vec_nearest_centroid" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       s.sql(
         """WITH x AS (SELECT label, posexplode(embedding) AS (pos, v) FROM embeddings),
@@ -909,7 +898,6 @@ object VectorOps {
     // and broadcast; the corpus is scanned once for distances and once
     // more ranked within labels.
     "q_vec_outlier_centroid" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       s.sql(
         """WITH x AS (SELECT label, posexplode(embedding) AS (pos, v) FROM embeddings),
@@ -987,7 +975,6 @@ object VectorOps {
     // reports 0.8–0.9 across sf0.001/0.01/0.1 (ivfSql scaladoc has the
     // sweep; the retired per-label codebook scored 0.0–0.2).
     "q_vec_ann_recall" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       ivfPrep(s, sf)
       s.sql(recallSparkSql)
@@ -998,7 +985,6 @@ object VectorOps {
     // collected 256-row codebook literal → serve (statement 2); the
     // oracle runs the one-query composition. Hash-checked like IVF.
     "q_vec_ann_pq" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       pqPrep(s, sf)
       s.sql(pqServeSparkSql)
@@ -1010,7 +996,6 @@ object VectorOps {
     // norm spread, so this also monitors how far the corpus drifts from
     // unit norm.
     "q_vec_pq_recall" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       pqPrep(s, sf)
       s.sql(recallSql(knnSparkSql, pqServeSparkSql,
@@ -1021,7 +1006,6 @@ object VectorOps {
     // Matryoshka truncation cost: recall@10 of the 16-dim-prefix
     // brute-force search vs the exact 64-dim one — see [[prefixKnnSql]].
     "q_vec_prefix_recall" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       s.sql(recallSql(knnSparkSql, prefixKnnSparkSql,
         collectSorted = "array_sort(collect_list(vec_id))",
@@ -1057,7 +1041,6 @@ object VectorOps {
     // argmin is a map-side-combinable min(struct(dist, id)) per cell, not
     // a window sort — the cell table stays small and broadcastable.
     "q_dedup_semantic" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       // Same fixpoint as the oracle's window form, but both argmins are
       // map-side-combinable min(struct(...)) aggregates — struct
@@ -1126,7 +1109,6 @@ object VectorOps {
     // doc_id). Both source rankings are top-50 rank windows over already-
     // reduced score relations; the fusion is a tiny full outer join.
     "q_search_rrf" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, sf).createOrReplaceTempView("documents")
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       s.sql(rrfSql(
@@ -1137,7 +1119,6 @@ object VectorOps {
     // Two-stage binary-quantized retrieval: Hamming shortlist → exact
     // cosine rerank — see [[bqRerankSql]].
     "q_vec_bq_rerank" -> ((s, sf) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, sf).createOrReplaceTempView("embeddings")
       s.sql(bqRerankSql(bqSigSpark, hamSpark, cosSpark, "/*+ BROADCAST(p) */"))
     }),

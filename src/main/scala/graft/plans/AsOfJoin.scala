@@ -189,7 +189,7 @@ object AsOf {
            leftTime: String, rightTime: String,
            rightTie: String, leftOuter: Boolean = false): DataFrame = {
     val spark = leftDf.sparkSession
-    GraftBridge.addStrategy(spark, AsOfJoinStrategy)
+    graft.functions.GraftFunctions.register(spark)
     val lp = leftDf.queryExecution.analyzed
     val rp = rightDf.queryExecution.analyzed
     def attr(p: LogicalPlan, name: String): Attribute =

@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Idempotent by construction: the rewrite only matches the two-argument
   * (threshold-less) form, which it eliminates — safe in a fix-point batch.
-  * Installed via GraftExtensions (injectOptimizerRule) or
-  * `spark.experimental.extraOptimizations`.
+  * Installed via GraftExtensions (injectOptimizerRule) or, on a live
+  * session, by `GraftFunctions.register`.
   */
 object LevenshteinBandRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Ckpt, Tables}
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -289,17 +289,7 @@ object StreamParity {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outFile = if (args.length > 1) args(1) else "STREAM_PARITY.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Reclaim reliable loop-checkpoint files as their RDDs are GC'd
-      // (static conf — must be set before the context; see Ckpt scaladoc).
-      .config(Ckpt.CleanerKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
 
     val parities = Seq[(String, DataFrame => DataFrame)](
       ("tumbling", StreamOps.tumblingCounts),

@@ -113,8 +113,6 @@ class AsofSqlSpec extends AnyFunSuite with SparkSessionTest {
 
   test("the live-session spelling (marker only, explicit rewrite) matches the typed API") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    GraftBridge.addStrategy(spark, graft.plans.AsOfJoinStrategy)
     val l = Seq((1L, 10L), (1L, 30L), (2L, 7L)).toDF("k", "t")
     val r = Seq((1L, 5L, "x"), (1L, 25L, "y"), (2L, 9L, "z")).toDF("rk", "rt", "v")
     l.createOrReplaceTempView("asql_l")

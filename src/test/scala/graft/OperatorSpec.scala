@@ -157,7 +157,6 @@ class OperatorSpec extends AnyFunSuite with SparkSessionTest
   }
 
   test("LevenshteinBandRule rewrites threshold filters, same results") {
-    org.apache.spark.sql.GraftBridge.addOptimization(spark, graft.plans.LevenshteinBandRule)
     // parquet-backed source so constant folding can't collapse the filter
     val q = Tables.documents(spark, sf0001)
       .filter(expr("levenshtein(source, 'src0') <= 1")).select("doc_id", "source")
@@ -331,7 +330,6 @@ class OperatorSpec extends AnyFunSuite with SparkSessionTest
   }
 
   test("vec_dot expression is bit-equal to the lambda fold") {
-    graft.functions.GraftFunctions.register(spark)
     Tables.embeddings(spark, sf0001).createOrReplaceTempView("embeddings")
     val diff = spark.sql(
       """SELECT max(abs(vec_dot(embedding, embedding) -

@@ -43,7 +43,6 @@ class PlantedGeometrySpec extends AnyFunSuite with SparkSessionTest {
   test("sample-bounded pair scan equals the unbounded statement when N <= cap") {
     // the embSampleSub guard must be invisible below the 2000-vector cap
     // (the graded-SF bit-identity claim, exercised on a second corpus)
-    graft.functions.GraftFunctions.register(spark)
     val bounded = SparkEntry.queries("q_vec_pairs_threshold")(spark, planted)
       .collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
     Tables.embeddings(spark, planted).createOrReplaceTempView("embeddings")

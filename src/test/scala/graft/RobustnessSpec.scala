@@ -53,7 +53,6 @@ class RobustnessSpec extends AnyFunSuite with SparkSessionTest {
   }
 
   test("vec_dot handles empty and length-mismatched arrays") {
-    graft.functions.GraftFunctions.register(spark)
     // untyped array() is ARRAY<VOID>: correctly rejected at analysis
     intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT vec_dot(array(), array())").collect()
@@ -77,7 +76,6 @@ class RobustnessSpec extends AnyFunSuite with SparkSessionTest {
 
   test("char_ngrams ≡ the substring lambda, incl. unicode and short strings") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq("hello world", "ab", "abc", "", "héllo wörld ünïcode",
       "日本語のテキスト", "x").toDF("s")
     // (sequence(1, 0) is a DESCENDING range in Spark, so the lambda twin

@@ -3,18 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Suite
 
-/** Shared local session for all suites (one forked JVM → one session). */
+/** Shared local session for all suites (one forked JVM → one session).
+  * Four cores whatever SPARK_GRAFT_CPUS says: the plan-shape baseline and
+  * the job-count specs are pinned at local[4]. */
 trait SparkSessionTest { self: Suite =>
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // Runaway-recursion brake sized per deployment (q_recursive_cte
-    // emits N×(depth+1) rows — default 1M trips at sf1); set in every
-    // harness session builder instead of mutated inside the query.
-    .config("spark.sql.cteRecursionRowLimit", "50000000")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   val sf0001 = "/root/testdata/sf0.001"
 }

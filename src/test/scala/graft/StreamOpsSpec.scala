@@ -471,7 +471,6 @@ class StreamOpsSpec extends AnyFunSuite with SparkSessionTest {
       assert(rows.contains((2L, 2L, null, null)), rows.toString)
       assert(rows.size == 2)
       // batch parity: the custom batch operator on the same data agrees
-      graft.functions.GraftFunctions.register(spark)
       val l = Seq((1L, ts("2024-01-01 10:05:00"), 1L), (2L, ts("2024-01-01 11:00:00"), 2L))
         .toDF("key", "lts", "lid")
       val r = Seq((1L, ts("2024-01-01 10:00:00"), 100L, 1.0),

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints formatted physical plans for representative queries
   * so pushdown / broadcast / codegen properties can be inspected
   * (`sbt "runMain graft.PlanCheck [names...]"`). Not part of the driver
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "q_agg_pricing_summary", "q_join_broadcast", "q_join_theta_range",
       "q_filter_range_time", "q_join_asof", "q_dedup_near", "q_topk")

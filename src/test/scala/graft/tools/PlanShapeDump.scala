@@ -64,14 +64,7 @@ object PlanShapeDump {
       case Array("--tsv", f) => f }
     val pat = args.filterNot(a => a.startsWith("--") ||
       tsvOut.contains(a)).headOption.getOrElse(".")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.cteRecursionRowLimit", "50000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val header = f"${"query"}%-36s cart bnlj shuf bcast reuse pushed"
     println(header)
     val rows = SparkEntry.queries.toSeq.sortBy(_._1)

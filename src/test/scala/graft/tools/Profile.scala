@@ -5,20 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** Scratch: decompose the per-query fixed floor. For each named query,
   * after full warmup, times N reps split into build (DataFrame
   * construction + analysis), plan (optimized + physical plan), and exec
-  * (count action). Usage: Profile <sfDir> <reps> <name...> */
+  * (count action). Usage: Profile <sfDir> <reps> <name...>
+  * (SPARK_GRAFT_CPUS and SPARK_GRAFT_EXTRA_CONF as for Bench). */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val reps = args(1).toInt; val names = args.drop(2)
     sys.props("graft.cache.tables") = "1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("PROFILE_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("="); spark.conf.set(k, v)
-    })
+    val spark = GraftSession.local(GraftSession.envCpus, GraftSession.envExtraConf)
     // stage/task accounting
     val nStages = new java.util.concurrent.atomic.AtomicInteger
     val nTasks = new java.util.concurrent.atomic.AtomicInteger

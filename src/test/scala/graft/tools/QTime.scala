@@ -1,11 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scratch: steady-state timing for a subset of queries (warm twice at
   * sf0.001 like Bench, then time N reps at the target SF).
   *
   * Env knobs for A/B experiments (r14 opt round):
-  *   SPARK_GRAFT_CPUS       master/core count (default 32, like Bench)
+  *   SPARK_GRAFT_CPUS       master/core count (default 4, like Bench)
   *   SPARK_GRAFT_EXTRA_CONF semicolon-separated k=v session confs
   *   SPARK_GRAFT_CACHE_TABLES=1 to match Bench's shared-scan setup
   * Prints per-rep wall plus the summed task/GC time attribution the
@@ -14,19 +13,7 @@ import org.apache.spark.sql.SparkSession
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val reps = args(1).toInt; val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.cteRecursionRowLimit", "50000000")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
-      s.split(";").filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-    }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus, GraftSession.envExtraConf)
     val taskMs = new java.util.concurrent.atomic.AtomicLong
     val gcMs = new java.util.concurrent.atomic.AtomicLong
     val nTasks = new java.util.concurrent.atomic.AtomicLong
