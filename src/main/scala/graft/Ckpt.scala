@@ -6,6 +6,18 @@ import org.apache.spark.sql.Dataset
   * propagation, BPE/unigram training, pagerank/HITS rounds, shared
   * fan-out materialization).
   *
+  * Loops go through one of two drivers, so the round counter, the cap,
+  * the convergence test and the checkpoint choice live here, once:
+  *  - [[rounds]] runs a fixed number of rounds and returns every state;
+  *  - [[fixpoint]] runs until a signature action returns the same value
+  *    twice in a row, or until its cap, where it logs one warning.
+  * Each state a step returns is checkpointed LAZILY by default: the
+  * round's own action (the convergence signature, or the readout of a
+  * fixed-round loop) materializes it, so a round costs no extra driver
+  * job. `eager = true` instead materializes each state in its own job
+  * as soon as it is built (the unigram Viterbi DP). The initial state
+  * is the caller's to checkpoint.
+  *
   * Default is `localCheckpoint()`: blocks live in executor storage — the
   * right trade single-node and the fastest option on a healthy cluster,
   * but localCheckpointed blocks DIE WITH AN EXECUTOR, and an iterative
@@ -50,6 +62,36 @@ object Ckpt {
   // a random UUID subdir — so we track what we installed.
   @volatile private var installedDir: String = null
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.Ckpt")
+
+  /** Runs `n` rounds from `init`; round `k` (1-based) maps the state
+    * after round `k - 1` through `step` and checkpoints the result.
+    * Returns all `n + 1` states, `init` first. */
+  def rounds[T](init: Dataset[T], n: Int, eager: Boolean = false)(
+      step: (Dataset[T], Int) => Dataset[T]): IndexedSeq[Dataset[T]] =
+    (1 to n).scanLeft(init)((st, k) => step(st, k).loopCheckpoint(eager))
+
+  /** Runs `step` (checkpointed as in [[rounds]]) from `init` until
+    * `signature` — one driver action per round, run on the round's state
+    * after every `batch` steps — returns the same value twice in a row,
+    * and returns that state. After `cap` rounds without that it logs one
+    * warning naming `name` and returns the last state. */
+  def fixpoint[T, S](name: String, init: Dataset[T], cap: Int,
+                     eager: Boolean = false, batch: Int = 1)(
+      step: (Dataset[T], Int) => Dataset[T])(
+      signature: Dataset[T] => S): Dataset[T] = {
+    @annotation.tailrec
+    def loop(st: Dataset[T], prev: Option[S], round: Int): Dataset[T] =
+      if (round == cap) {
+        log.warn(s"$name: round cap ($cap) hit before the fixpoint " +
+          s"(last signature ${prev.getOrElse("none")}); the result may not be final")
+        st
+      } else {
+        val next = rounds(st, batch, eager)((s, k) => step(s, round * batch + k)).last
+        val sig = signature(next)
+        if (prev.contains(sig)) next else loop(next, Some(sig), round + 1)
+      }
+    loop(init, None, 0)
+  }
 
   implicit final class LoopCheckpoint[T](private val ds: Dataset[T]) extends AnyVal {
     /** `localCheckpoint(eager)` by default; reliable `checkpoint(eager)`

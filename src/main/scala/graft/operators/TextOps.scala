@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OracleDet, Tables}
+import graft.{Ckpt, OracleDet, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -485,14 +485,13 @@ object TextOps {
     * The DP is `maxLen` fused micro-stages over ≤ |words|·positions
     * rows — vocab-sized, never corpus-sized. */
   private def ugViterbi(s: SparkSession, maxLen: Int): DataFrame = {
-    var dp = s.sql(
+    val init = s.sql(
       "SELECT word, c, 0 AS pos, CAST(0 AS BIGINT) AS cost, '' AS path FROM ug_wf")
       .loopCheckpoint()
-    for (p <- 1 to maxLen) {
+    Ckpt.rounds(init, maxLen, eager = true) { (dp, p) =>
       dp.createOrReplaceTempView("ug_dp")
-      dp = dp.unionByName(s.sql(ugStepSql(p))).loopCheckpoint()
-    }
-    dp.createOrReplaceTempView("ug_dp")
+      dp.unionByName(s.sql(ugStepSql(p)))
+    }.last.createOrReplaceTempView("ug_dp")
     s.sql(ugBestSql).loopCheckpoint()
   }
 
@@ -708,9 +707,9 @@ object TextOps {
     * frontier one hop, dedup against everything visited, stop when the
     * frontier empties. The [[starContractLabels]] discipline: per round
     * ONE fused job (expand + distinct + anti-join, materialized by the
-    * eager checkpoint whose count decides termination), rounds bounded by
-    * graph eccentricity (O(diameter), not O(paths)), and each round's
-    * work is frontier-sized. `edges` must have columns (src, dst),
+    * count that decides termination), rounds bounded by
+    * graph eccentricity (O(diameter), not O(paths)), and each round
+    * expands only the frontier (the previous round's depth). `edges` must have columns (src, dst),
     * `seeds` a column (node) type-compatible with src; returns
     * (node, depth) with depth = minimum hop count from any seed.
     * Dedup per round is what makes this scale: visited acts as the
@@ -718,35 +717,18 @@ object TextOps {
     * path is dropped before it can fan out again. */
   private[graft] def reachLabels(edges: DataFrame, seeds: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-    var visited = seeds.select(col("node")).distinct()
+    val init = seeds.select(col("node")).distinct()
       .withColumn("depth", lit(0)).loopCheckpoint()
-    var frontier = visited
-    var depth = 0
-    var done = frontier.isEmpty
-    while (!done && depth < 1000) {
-      depth += 1
-      // r15 opt: lazy checkpoint + count() — the count is the single
-      // action that materializes the round AND decides termination
-      // (the starContractLabels discipline). The former eager
-      // checkpoint + isEmpty() pair cost a second driver job round-trip
-      // per round, pure scheduling floor on these frontier-sized stages.
-      val next = frontier.join(e, frontier("node") === e("src"))
+    // round d expands the depth d-1 frontier; the visited count is the
+    // one action per round, and it stops changing once the frontier is
+    // empty. The cap (a 1000-hop shortest path) is a runaway backstop.
+    Ckpt.fixpoint("reachLabels", init, cap = 1000) { (visited, depth) =>
+      val frontier = visited.filter(col("depth") === depth - 1)
+      visited.unionByName(frontier.join(e, frontier("node") === e("src"))
         .select(e("dst").as("node")).distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
-        .withColumn("depth", lit(depth))
-        .loopCheckpoint(eager = false)
-      if (next.count() == 0L) done = true
-      else {
-        visited = visited.unionByName(next).loopCheckpoint(eager = false)
-        frontier = next
-      }
-    }
-    // 1000 rounds = a graph with a 1000-hop shortest path; a runaway
-    // backstop in the starContractLabels mold, not an expected exit.
-    if (!done)
-      System.err.println("WARN reachLabels: round cap (1000) hit before " +
-        "the frontier emptied — depths past the cap are missing")
-    visited
+        .withColumn("depth", lit(depth)))
+    }(_.count())
   }
 
   /** Single-source shortest-path distances over a weighted directed edge
@@ -765,44 +747,22 @@ object TextOps {
     * distance exact, so the fixpoint aggregate needs no float care. */
   private[graft] def ssspLabels(edges: DataFrame, seeds: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w"))
-    var dist = seeds.select(col("node")).distinct()
+    val init = seeds.select(col("node")).distinct()
       .withColumn("dist", lit(0L)).loopCheckpoint()
-    var prev: (Long, java.math.BigDecimal) = null
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 200) {
-      // r15 opt: TWO relaxation rounds per convergence check — halves the
-      // per-round driver job floor (guide §1.2). Exactness is unchanged:
-      // relaxation is monotone (distances only decrease, the node set
-      // only grows), so (count, Σdist) stable across a 2-round batch
-      // certifies that NEITHER round changed anything — the same
-      // fixpoint argument, checked every other round. Each half is
-      // lazily checkpointed (lineage truncates at materialization); the
-      // one convergence aggregate materializes the whole batch.
-      var next = dist
-      for (_ <- 1 to 2) {
-        val cur = next
-        val cand = cur.join(e, cur("node") === e("src"))
-          .select(e("dst").as("node"), (cur("dist") + e("w")).as("dist"))
-        next = cur.unionByName(cand)
-          .groupBy("node").agg(min(col("dist")).as("dist"))
-          .loopCheckpoint(eager = false)
-      }
-      // the convergence aggregate is the action that materializes the batch
-      val row = next.agg(count(lit(1)),
+    // TWO relaxations per convergence check halve the per-round driver
+    // job floor (guide §1.2). Exactness is unchanged: relaxation is
+    // monotone (distances only decrease, the node set only grows), so
+    // (count, Σdist) stable across a 2-relaxation batch certifies that
+    // NEITHER relaxation changed anything.
+    Ckpt.fixpoint("ssspLabels", init, cap = 200, batch = 2) { (cur, _) =>
+      val cand = cur.join(e, cur("node") === e("src"))
+        .select(e("dst").as("node"), (cur("dist") + e("w")).as("dist"))
+      cur.unionByName(cand).groupBy("node").agg(min(col("dist")).as("dist"))
+    } { dist =>
+      val row = dist.agg(count(lit(1)),
         sum(col("dist").cast(DecimalType(38, 0)))).head()
-      val cur = (row.getLong(0),
-        Option(row.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-      converged = prev != null && cur._1 == prev._1 &&
-        cur._2.compareTo(prev._2) == 0
-      prev = cur
-      dist = next
-      iter += 1
+      (row.getLong(0), Option(row.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
     }
-    if (!converged)
-      System.err.println("WARN ssspLabels: round cap (200) hit before the " +
-        "(count, Σdist) fixpoint — distances may not be final")
-    dist
   }
 
   /** Pairwise Jensen–Shannon divergence matrix between source unigram
@@ -1000,20 +960,14 @@ object TextOps {
     * full LS+SS round is one fused Spark job and ΣL certifies the
     * fixpoint. */
   private[graft] def starContractLabels(pairsAB: DataFrame): DataFrame = {
-    def dbg(m: String): Unit =
-      if (sys.env.contains("GRAFT_CC_DEBUG")) System.err.println(s"CCPHASE $m t=${System.nanoTime()}")
-    dbg("start")
-    // canonical undirected edges oriented (u > v); lazy checkpoint since
-    // r15 — round 1 still reads them twice (aggregate + join probe) but
-    // both references share one RDD, so the caller's expensive
-    // candidate-pair plan runs once either way; round 1's convergence
-    // aggregate is the action that materializes it (one fewer job)
-    var edges = pairsAB.select(
+    // canonical undirected edges oriented (u > v); round 1 reads them
+    // twice (aggregate + join probe) but both references share one RDD,
+    // so the caller's expensive candidate-pair plan runs once
+    val init = pairsAB.select(
         greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
       .where(col("u") =!= col("v"))
       .loopCheckpoint(eager = false)
-    dbg("init-ckpt")
     def sym(e: DataFrame): DataFrame =
       e.select(col("u").as("x"), col("v").as("y"))
         .union(e.select(col("v").as("x"), col("u").as("y")))
@@ -1025,10 +979,9 @@ object TextOps {
         .head().getDecimal(0)
       if (d == null) java.math.BigDecimal.ZERO else d
     }
-    var prev: java.math.BigDecimal = null
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 50) {
+    // the cap is a runaway backstop (star contraction converges in
+    // O(log d) rounds — 50 covers any graph with diameter < 2^50)
+    val edges = Ckpt.fixpoint("starContractLabels", init, cap = 50) { (edges, _) =>
       // large-star: for every node x with m = min(N(x) ∪ {x}), rewire
       // each larger neighbor y > x to (y, m). The groupBy and the join
       // probe share one exchange of sym(edges) on x (ReuseExchange).
@@ -1046,25 +999,8 @@ object TextOps {
         .where(col("v") =!= col("m2"))
         .select(col("v").as("u"), col("m2").as("v"))
       val ssSelf = m2.select(col("u"), col("m2").as("v"))
-      // lazy checkpoint: the convergence aggregate below is the action
-      // that materializes the round, so each round is ONE job.
-      val next = ssPairs.union(ssSelf).loopCheckpoint(eager = false)
-      val cur = labelSum(next)
-      edges = next
-      converged = prev != null && cur.compareTo(prev) == 0
-      prev = cur
-      iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG")) System.err.println(s"CCROUND $iter sum=$cur t=${System.nanoTime()}")
-    }
-    // the cap is a runaway backstop (star contraction converges in
-    // O(log d) rounds — 50 covers any graph with diameter < 2^50); if it
-    // ever trips, labels are from an UNCONVERGED edge set, so say so
-    // loudly instead of silently emitting under-collapsed clusters.
-    if (!converged)
-      System.err.println(
-        "WARN starContractLabels: iteration cap (50) hit before the " +
-          s"ΣL fixpoint (last ΣL=$prev) — returned labels may be under-collapsed")
-    dbg("loop-done")
+      ssPairs.union(ssSelf)
+    }(labelSum(_))
     // every edge-incident node is adjacent to its root (certified by the
     // stop condition)
     sym(edges).groupBy("x").agg(min(col("y")).as("mn"))
@@ -1354,6 +1290,62 @@ object TextOps {
        |            * sqrt(CAST(m * syy - sy * sy AS DOUBLE))) * 1e6 + 0.5) / 1e6
        |  END AS assortativity
        |FROM st ORDER BY lang""".stripMargin
+
+  /** The deterministic 4-round label propagation q_graph_labelprop and
+    * q_graph_modularity read out, over the symmetric co-purchase graph
+    * (lineitem rows with quantity ≥ 48): each round every node adopts the
+    * most frequent label among its neighbors PLUS itself (the self-vote
+    * damps the 2-cycling sync LPA exhibits on bipartite graphs), ties
+    * broken by the smaller label. Per round: one label-count shuffle + a
+    * min-struct argmax (no per-node sort). Registers the edges as `lp_e`
+    * and the final labels as `lp_lbl`; the readout's action materializes
+    * the whole loop. */
+  private def lpaLabels(s: SparkSession, sf: String): Unit = {
+    Tables.lineitem(s, sf).createOrReplaceTempView("lineitem")
+    val e = s.sql(reachEdgesSql("STRING", minQty = 48))
+      .loopCheckpoint(eager = false)
+    e.createOrReplaceTempView("lp_e")
+    val init = e.select(col("src").as("node")).distinct()
+      .withColumn("lab", col("node")).loopCheckpoint(eager = false)
+    Ckpt.rounds(init, 4) { (lbl, _) =>
+      lbl.createOrReplaceTempView("lp_lbl")
+      s.sql(
+        """SELECT node, m.l AS lab FROM (
+          |  SELECT node, min(named_struct('nc', -cnt, 'l', lab)) AS m FROM (
+          |    SELECT v.node, v.lab, count(*) AS cnt FROM (
+          |      SELECT e.dst AS node, l.lab
+          |      FROM lp_e e JOIN lp_lbl l ON e.src = l.node
+          |      UNION ALL SELECT node, lab FROM lp_lbl) v
+          |    GROUP BY v.node, v.lab) c
+          |  GROUP BY node) t""".stripMargin)
+    }.last.createOrReplaceTempView("lp_lbl")
+  }
+
+  /** DuckDB: the distinct co-purchase pairs the kcore, labelprop and
+    * modularity oracles build their graph from. */
+  private val coPurchaseDuckE0: String =
+    "SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src, " +
+      "'p' || CAST(l_partkey AS VARCHAR) AS dst " +
+      "FROM lineitem WHERE l_quantity >= 48"
+
+  /** DuckDB CTE list (no leading WITH) for [[lpaLabels]]: the symmetric
+    * edges `e` and the labels after each round, `l0`…`l4` (row_number
+    * argmax, the same ties). */
+  private val lpaDuckCtes: String =
+    (s"e0 AS MATERIALIZED ($coPurchaseDuckE0),\n" +
+      "e AS MATERIALIZED (SELECT src, dst FROM e0 " +
+      "UNION ALL SELECT dst AS src, src AS dst FROM e0),\n" +
+      "l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lab FROM e)") +
+      (1 to 4).map(i => s""",
+        |l$i AS MATERIALIZED (SELECT node, lab FROM (
+        |  SELECT node, lab,
+        |    row_number() OVER (PARTITION BY node ORDER BY cnt DESC, lab) AS rn
+        |  FROM (SELECT v.node, v.lab, count(*) AS cnt FROM (
+        |          SELECT e.dst AS node, l.lab
+        |          FROM e JOIN l${i - 1} l ON e.src = l.node
+        |          UNION ALL SELECT node, lab FROM l${i - 1}) v
+        |        GROUP BY v.node, v.lab) c) r
+        |  WHERE rn = 1)""".stripMargin).mkString
 
   /** Modularity readout over a symmetrized (directed-both-ways) edge
     * relation and a node→community label relation: Q stated with
@@ -2211,9 +2203,7 @@ object TextOps {
     "q_graph_pagerank" -> ((s, sf) => {
       Tables.lineitem(s, sf).createOrReplaceTempView("lineitem")
       // the degree-annotated edge list is every round's loop invariant —
-      // materialized once (see [[pagerankEdgeCtes]]); lazy since r15:
-      // same shared-RDD truncation, one fewer driver action (the chain
-      // statement's own action materializes it)
+      // materialized once (see [[pagerankEdgeCtes]])
       s.sql(pagerankEdgesSql("STRING"))
         .loopCheckpoint(eager = false).createOrReplaceTempView("pr_e")
       s.sql(s"WITH $pagerankIterCtes\n$pagerankFinalSql")
@@ -2238,8 +2228,6 @@ object TextOps {
       // one-value seed aggregate up front (bounded driver handoff, the
       // DPP-threshold pattern) instead of letting every step rescan for
       // it. Measured 3.1 → 1.5 s warm at sf0.1.
-      // lazy since r15: the seed aggregate below is the action that
-      // materializes the edges — one fewer driver job
       val edges = s.sql(reachEdgesSql("STRING")).loopCheckpoint(eager = false)
       edges.createOrReplaceTempView("rch_e")
       val seed = edges.filter(col("src") >= "s").agg(min(col("src")))
@@ -2265,8 +2253,6 @@ object TextOps {
     // depth, the same readout as q_graph_reachability.
     "q_graph_reach_deep" -> ((s, sf) => {
       Tables.lineitem(s, sf).createOrReplaceTempView("lineitem")
-      // lazy since r15: the loop's first action materializes the edges —
-      // one fewer driver job, same shared-RDD truncation
       val edges = s.sql(reachEdgesSql("STRING", minQty = 48))
         .loopCheckpoint(eager = false)
       // 1-row seed relation (no driver handoff at all — the null guard is
@@ -2297,67 +2283,28 @@ object TextOps {
     // co-partitioned semi-joins on the node key.
     "q_graph_kcore" -> ((s, sf) => {
       Tables.lineitem(s, sf).createOrReplaceTempView("lineitem")
-      // lazy since r15: the readout union is the single materializing
-      // action for the whole peel (rounds were already lazy)
-      var g = s.sql(reachEdgesSql("STRING", minQty = 48))
+      val g0 = s.sql(reachEdgesSql("STRING", minQty = 48))
         .loopCheckpoint(eager = false)
-      def stat(r: Int, e: DataFrame): DataFrame =
-        e.agg(countDistinct(col("src")).as("n_nodes"),
-            count(lit(1)).as("n_edges"))
-          .select(lit(r).as("round"), col("n_nodes"), col("n_edges"))
-      val stats = Seq.newBuilder[DataFrame]
-      stats += stat(0, g)
-      for (r <- 1 to 8) {
+      Ckpt.rounds(g0, 8) { (g, _) =>
         val keep = g.groupBy("src").agg(count(lit(1)).as("d"))
           .filter(col("d") >= 4).select(col("src").as("node"))
         val keep2 = keep.select(col("node").as("node2"))
-        g = g.join(keep, g("src") === keep("node"), "left_semi")
+        g.join(keep, g("src") === keep("node"), "left_semi")
           .join(keep2, col("dst") === keep2("node2"), "left_semi")
-          .loopCheckpoint(eager = false)
-        stats += stat(r, g)
-      }
-      stats.result().reduce(_ unionByName _).orderBy("round")
+      }.zipWithIndex.map { case (g, r) =>
+        g.agg(countDistinct(col("src")).as("n_nodes"), count(lit(1)).as("n_edges"))
+          .select(lit(r).as("round"), col("n_nodes"), col("n_edges"))
+      }.reduce(_ unionByName _).orderBy("round")
     }),
 
-    // Label-propagation communities (4 synchronized rounds) over the
-    // sparse co-purchase graph — the classic near-linear community
-    // detector, stated as the SAME bounded-round loop discipline as
-    // q_graph_kcore: each round every node adopts the most frequent
-    // label among its neighbors PLUS itself (the self-vote damps the
-    // 2-cycling sync LPA exhibits on bipartite graphs), ties broken by
-    // the smaller label — fully deterministic, so the bounded peel is
-    // exactly checkable instead of a convergence claim. Per round: one
-    // label-count shuffle + a min-struct argmax (no per-node sort);
-    // labels materialized per round (the loop invariant). Readout =
-    // the 15 largest communities + the community count.
+    // Label-propagation communities (4 synchronized rounds, see
+    // [[lpaLabels]]) over the sparse co-purchase graph — the classic
+    // near-linear community detector, stated as the SAME bounded-round
+    // loop discipline as q_graph_kcore: fully deterministic, so the
+    // bounded loop is exactly checkable instead of a convergence claim.
+    // Readout = the 15 largest communities + the community count.
     "q_graph_labelprop" -> ((s, sf) => {
-      Tables.lineitem(s, sf).createOrReplaceTempView("lineitem")
-      // r15 opt: every checkpoint in the loop is LAZY — each still
-      // truncates lineage to a shared single-computation RDD (so the
-      // two references per round cost one evaluation, exactly as
-      // before), but the whole 4-round loop + readout now materializes
-      // as ONE driver action instead of six. The eager form paid a job
-      // round-trip per round on KB-sized label tables — pure
-      // scheduling floor (guide §1.2: per-round driver overhead).
-      val e = s.sql(reachEdgesSql("STRING", minQty = 48))
-        .loopCheckpoint(eager = false)
-      e.createOrReplaceTempView("lp_e")
-      var lbl = e.select(col("src").as("node")).distinct()
-        .withColumn("lab", col("node")).loopCheckpoint(eager = false)
-      for (_ <- 1 to 4) {
-        lbl.createOrReplaceTempView("lp_lbl")
-        lbl = s.sql(
-          """SELECT node, m.l AS lab FROM (
-            |  SELECT node, min(named_struct('nc', -cnt, 'l', lab)) AS m FROM (
-            |    SELECT v.node, v.lab, count(*) AS cnt FROM (
-            |      SELECT e.dst AS node, l.lab
-            |      FROM lp_e e JOIN lp_lbl l ON e.src = l.node
-            |      UNION ALL SELECT node, lab FROM lp_lbl) v
-            |    GROUP BY v.node, v.lab) c
-            |  GROUP BY node) t""".stripMargin)
-          .loopCheckpoint(eager = false)
-      }
-      lbl.createOrReplaceTempView("lp_lbl")
+      lpaLabels(s, sf)
       s.sql(
         """WITH comm AS (SELECT lab, CAST(count(*) AS BIGINT) AS n_members
           |              FROM lp_lbl GROUP BY lab)
@@ -2368,36 +2315,15 @@ object TextOps {
 
     // Newman modularity of the 4-round label-propagation partition — the
     // readout that says whether the communities are real structure or
-    // noise: Q = intra/2m − Σ_c (d_c/2m)². Runs the SAME deterministic
-    // LPA loop as q_graph_labelprop (self-vote, min-label ties), then
-    // three integer aggregates over the symmetrized edge list (directed
-    // counts, so 2m falls out naturally); the only float math is the
+    // noise: Q = intra/2m − Σ_c (d_c/2m)². Runs the SAME [[lpaLabels]]
+    // loop as q_graph_labelprop, then three integer aggregates over the
+    // symmetrized edge list (directed counts, so 2m falls out
+    // naturally); the only float math is the
     // final two-term expression, floor-quantized. Scale: the loop is the
     // LPA cost; the readout adds one co-partitioned edge-label join.
     "q_graph_modularity" -> ((s, sf) => {
-      Tables.lineitem(s, sf).createOrReplaceTempView("lineitem")
-      // r15 opt: lazy loop checkpoints — see q_graph_labelprop (same
-      // LPA loop): one driver action materializes the whole loop.
-      val e = s.sql(reachEdgesSql("STRING", minQty = 48))
-        .loopCheckpoint(eager = false)
-      e.createOrReplaceTempView("md_e")
-      var lbl = e.select(col("src").as("node")).distinct()
-        .withColumn("lab", col("node")).loopCheckpoint(eager = false)
-      for (_ <- 1 to 4) {
-        lbl.createOrReplaceTempView("md_lbl")
-        lbl = s.sql(
-          """SELECT node, m.l AS lab FROM (
-            |  SELECT node, min(named_struct('nc', -cnt, 'l', lab)) AS m FROM (
-            |    SELECT v.node, v.lab, count(*) AS cnt FROM (
-            |      SELECT e.dst AS node, l.lab
-            |      FROM md_e e JOIN md_lbl l ON e.src = l.node
-            |      UNION ALL SELECT node, lab FROM md_lbl) v
-            |    GROUP BY v.node, v.lab) c
-            |  GROUP BY node) t""".stripMargin)
-          .loopCheckpoint(eager = false)
-      }
-      lbl.createOrReplaceTempView("md_lbl")
-      s.sql(modularityReadoutSql(eRef = "md_e", lblRef = "md_lbl", idiv = "DIV"))
+      lpaLabels(s, sf)
+      s.sql(modularityReadoutSql(eRef = "lp_e", lblRef = "lp_lbl", idiv = "DIV"))
     }),
 
     // Weighted single-source shortest paths over the strong-purchase
@@ -2428,17 +2354,18 @@ object TextOps {
     // end — see [[textrankChainSql]]; edges materialized once.
     "q_text_textrank" -> ((s, sf) => {
       Tables.documentsPar(s, sf).createOrReplaceTempView("documents")
-      // r15 opt — the q_graph_hits loop discipline (guide §2.4/§5): the
+      // The q_graph_hits loop discipline (guide §2.4/§5): the
       // one-statement chain's CTEs are multi-referenced (wd feeds both
       // contribution rounds, s1 feeds c2 AND s2), and Spark's CTE
       // inlining re-expands them into ~7 copies of the degree aggregate
       // + repeated join subtrees — measured 19–36 s isolated at sf0.1 /
       // local[32] (task 350–1000 s, GC up to 176 s). Run the identical
-      // integer arithmetic as checkpointed STEPS instead, with the
+      // integer arithmetic as checkpointed ROUNDS instead, with the
       // degree total denormalized onto the edges once (the pagerank
       // pr_e pattern) so each round is exactly: join scores, one
-      // map-combined sum. s·w DIV wtot reads the same values either
-      // way, so scores are bit-identical; the DuckDB oracle keeps the
+      // map-combined sum, rejoined onto the checkpointed previous
+      // scores. s·w DIV wtot reads the same values either way, so
+      // scores are bit-identical; the DuckDB oracle keeps the
       // one-statement chain (AS MATERIALIZED) and the gate proves
       // loop ≡ chain every run.
       s.sql(textrankEdgesSql(
@@ -2448,31 +2375,25 @@ object TextOps {
           |                          (x, y) -> concat(x, ' ', y))) AS bg
           |  FROM (SELECT split(text, ' ') AS toks FROM documents)) z""".stripMargin))
         .loopCheckpoint(eager = false).createOrReplaceTempView("tr_e")
-      def step(sql: String, view: String): Unit =
-        s.sql(sql).loopCheckpoint(eager = false).createOrReplaceTempView(view)
-      step(
+      s.sql(
         """SELECT e.src, e.dst, e.w, wd.wtot
           |FROM tr_e e JOIN (SELECT src, CAST(sum(w) AS BIGINT) AS wtot
-          |                  FROM tr_e GROUP BY src) wd ON wd.src = e.src""".stripMargin,
-        "tr_ew")
-      step("SELECT DISTINCT src AS t, CAST(1000000 AS BIGINT) AS s FROM tr_ew",
-        "tr_s0")
-      def round(prevS: String, cView: String, sView: String): Unit = {
-        step(
-          s"""SELECT e.dst AS t, CAST(sum(p.s * e.w DIV e.wtot) AS BIGINT) AS contrib
-             |FROM tr_ew e JOIN $prevS p ON p.t = e.src GROUP BY e.dst""".stripMargin,
-          cView)
-        step(
-          s"""SELECT p.t, CAST(150000 + 17 * coalesce(c.contrib, 0) DIV 20 AS BIGINT) AS s
-             |FROM $prevS p LEFT JOIN $cView c ON c.t = p.t""".stripMargin,
-          sView)
-      }
-      round("tr_s0", "tr_c1", "tr_s1")
-      round("tr_s1", "tr_c2", "tr_s2")
+          |                  FROM tr_e GROUP BY src) wd ON wd.src = e.src""".stripMargin)
+        .loopCheckpoint(eager = false).createOrReplaceTempView("tr_ew")
+      val s0 = s.sql("SELECT DISTINCT src AS t, CAST(1000000 AS BIGINT) AS s FROM tr_ew")
+        .loopCheckpoint(eager = false)
+      Ckpt.rounds(s0, 2) { (prev, _) =>
+        prev.createOrReplaceTempView("tr_s")
+        s.sql(
+          """SELECT p.t, CAST(150000 + 17 * coalesce(c.contrib, 0) DIV 20 AS BIGINT) AS s
+            |FROM tr_s p LEFT JOIN (
+            |  SELECT e.dst AS t, CAST(sum(p.s * e.w DIV e.wtot) AS BIGINT) AS contrib
+            |  FROM tr_ew e JOIN tr_s p ON p.t = e.src GROUP BY e.dst) c ON c.t = p.t""".stripMargin)
+      }.last.createOrReplaceTempView("tr_s")
       s.sql(
         """SELECT t AS token, s AS score_ppm,
           |  CAST(row_number() OVER (ORDER BY s DESC, t) AS BIGINT) AS rank
-          |FROM tr_s2 ORDER BY rank LIMIT 20""".stripMargin)
+          |FROM tr_s ORDER BY rank LIMIT 20""".stripMargin)
     }),
 
     // HITS hubs/authorities over the bipartite customer→part purchase
@@ -2497,37 +2418,31 @@ object TextOps {
       // passes (measured 4.9 s → 1.3 s at sf0.1). The oracle keeps the
       // one-statement chain with AS MATERIALIZED, so the gate proves
       // loop ≡ chain every run.
-      // r15 opt: the step checkpoints are LAZY — same lineage
-      // truncation + single evaluation per stage (each _s view is
-      // referenced twice by its rescale), but the whole 4-half-step
-      // chain materializes under the readout's one action instead of
-      // paying 9 driver job round-trips (guide §1.2).
       s.sql(hitsEdgesSql).loopCheckpoint(eager = false)
         .createOrReplaceTempView("hits_e")
-      def step(sumSql: String, stage: String, key: String): Unit = {
-        s.sql(sumSql).loopCheckpoint(eager = false)
-          .createOrReplaceTempView(s"${stage}_s")
-        s.sql(
-          s"""SELECT $key, CAST(s * 1000000 DIV mx.m AS BIGINT) AS sc
-             |FROM ${stage}_s CROSS JOIN (SELECT max(s) AS m FROM ${stage}_s) mx""".stripMargin)
-          .loopCheckpoint(eager = false).createOrReplaceTempView(stage)
+      // a half-step sums a side's scores, rescaled to ppm of their max
+      def rescaled(key: String, sumSql: String): DataFrame = {
+        s.sql(sumSql).createOrReplaceTempView("hits_sum")
+        s.sql(s"""SELECT $key, CAST(s * 1000000 DIV mx.m AS BIGINT) AS sc
+                 |FROM hits_sum CROSS JOIN (SELECT max(s) AS m FROM hits_sum) mx""".stripMargin)
       }
-      step("SELECT i, CAST(count(*) AS BIGINT) AS s FROM hits_e GROUP BY i", "h_a1n", "i")
-      step("""SELECT e.u, CAST(sum(an.sc) AS BIGINT) AS s
-             |FROM hits_e e JOIN h_a1n an ON an.i = e.i GROUP BY e.u""".stripMargin,
-        "h_h1n", "u")
-      step("""SELECT e.i, CAST(sum(hn.sc) AS BIGINT) AS s
-             |FROM hits_e e JOIN h_h1n hn ON hn.u = e.u GROUP BY e.i""".stripMargin,
-        "h_a2n", "i")
-      step("""SELECT e.u, CAST(sum(an.sc) AS BIGINT) AS s
-             |FROM hits_e e JOIN h_a2n an ON an.i = e.i GROUP BY e.u""".stripMargin,
-        "h_h2n", "u")
+      val a1 = rescaled("i", "SELECT i, CAST(count(*) AS BIGINT) AS s FROM hits_e GROUP BY i")
+        .loopCheckpoint(eager = false)
+      // odd half-steps score hubs from authorities, even ones the reverse
+      val half = Ckpt.rounds(a1, 3) { (prev, k) =>
+        prev.createOrReplaceTempView("hits_prev")
+        val (to, from) = if (k % 2 == 1) ("u", "i") else ("i", "u")
+        rescaled(to, s"""SELECT e.$to, CAST(sum(p.sc) AS BIGINT) AS s
+                        |FROM hits_e e JOIN hits_prev p ON p.$from = e.$from
+                        |GROUP BY e.$to""".stripMargin)
+      }
+      half(2).createOrReplaceTempView("h_a2n")
+      half(3).createOrReplaceTempView("h_h2n")
       s.sql(hitsReadoutSql(aRef = "h_a2n", hRef = "h_h2n"))
     }),
 
     "q_graph_sssp" -> ((s, sf) => {
       Tables.lineitem(s, sf).createOrReplaceTempView("lineitem")
-      // lazy since r15: the loop's first action materializes the edges
       val edges = s.sql(ssspEdgesSql("STRING")).loopCheckpoint(eager = false)
       val seeds = edges.filter(col("src") >= "s")
         .agg(min(col("src")).as("node")).filter(col("node").isNotNull)
@@ -2883,9 +2798,7 @@ object TextOps {
           "the fixed 4x64-bit signature would silently drop tokens; " +
           "use the wide-bitmap encoding (q_dedup_near_wide) for this corpus")
       dict.createOrReplaceTempView("inc_dict")
-      // lazy since r15: the verdict statement's action materializes the
-      // registry — one fewer driver job (dict stays eager: the maxId
-      // guard scalar needs it)
+      // (dict is eager: the maxId guard scalar needs it)
       s.sql(incDedupRegSql(hint)).loopCheckpoint(eager = false)
         .createOrReplaceTempView("inc_reg")
       s.sql(incDedupVerdictSql(hint))
@@ -3773,67 +3686,21 @@ object TextOps {
       "WITH tre AS MATERIALIZED (" + edges.replace("\n", "\n  ") + "),\n" +
         chain.stripPrefix("WITH ")
     },
-    "q_graph_labelprop" -> {
-      val e0 = "SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src, " +
-        "'p' || CAST(l_partkey AS VARCHAR) AS dst " +
-        "FROM lineitem WHERE l_quantity >= 48"
-      val ctes = new StringBuilder(
-        s"e0 AS MATERIALIZED ($e0),\n" +
-          "e AS MATERIALIZED (SELECT src, dst FROM e0 " +
-          "UNION ALL SELECT dst AS src, src AS dst FROM e0),\n" +
-          "l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lab FROM e)")
-      for (i <- 1 to 4) {
-        ctes ++= s""",
-          |l$i AS MATERIALIZED (SELECT node, lab FROM (
-          |  SELECT node, lab,
-          |    row_number() OVER (PARTITION BY node ORDER BY cnt DESC, lab) AS rn
-          |  FROM (SELECT v.node, v.lab, count(*) AS cnt FROM (
-          |          SELECT e.dst AS node, l.lab
-          |          FROM e JOIN l${i - 1} l ON e.src = l.node
-          |          UNION ALL SELECT node, lab FROM l${i - 1}) v
-          |        GROUP BY v.node, v.lab) c) r
-          |  WHERE rn = 1)""".stripMargin
-      }
-      s"""WITH $ctes,
+    "q_graph_labelprop" ->
+      s"""WITH $lpaDuckCtes,
          |comm AS (SELECT lab, CAST(count(*) AS BIGINT) AS n_members
          |         FROM l4 GROUP BY lab)
          |SELECT lab AS community, n_members,
          |  (SELECT CAST(count(*) AS BIGINT) FROM comm) AS n_comms
-         |FROM comm ORDER BY n_members DESC, community LIMIT 15""".stripMargin
-    },
+         |FROM comm ORDER BY n_members DESC, community LIMIT 15""".stripMargin,
 
-    "q_graph_modularity" -> {
-      val e0 = "SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src, " +
-        "'p' || CAST(l_partkey AS VARCHAR) AS dst " +
-        "FROM lineitem WHERE l_quantity >= 48"
-      val ctes = new StringBuilder(
-        s"e0 AS MATERIALIZED ($e0),\n" +
-          "e AS MATERIALIZED (SELECT src, dst FROM e0 " +
-          "UNION ALL SELECT dst AS src, src AS dst FROM e0),\n" +
-          "l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lab FROM e)")
-      for (i <- 1 to 4) {
-        ctes ++= s""",
-          |l$i AS MATERIALIZED (SELECT node, lab FROM (
-          |  SELECT node, lab,
-          |    row_number() OVER (PARTITION BY node ORDER BY cnt DESC, lab) AS rn
-          |  FROM (SELECT v.node, v.lab, count(*) AS cnt FROM (
-          |          SELECT e.dst AS node, l.lab
-          |          FROM e JOIN l${i - 1} l ON e.src = l.node
-          |          UNION ALL SELECT node, lab FROM l${i - 1}) v
-          |        GROUP BY v.node, v.lab) c) r
-          |  WHERE rn = 1)""".stripMargin
-      }
-      // fold the readout's WITH-chain into this one
-      val readout = modularityReadoutSql("e", "l4", idiv = "//").stripPrefix("WITH ")
-      s"WITH $ctes,\n$readout"
-    },
+    // the readout's WITH-chain folds into the LPA one
+    "q_graph_modularity" -> (s"WITH $lpaDuckCtes,\n" +
+      modularityReadoutSql("e", "l4", idiv = "//").stripPrefix("WITH ")),
 
     "q_graph_kcore" -> {
-      val e0 = "SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src, " +
-        "'p' || CAST(l_partkey AS VARCHAR) AS dst " +
-        "FROM lineitem WHERE l_quantity >= 48"
       val ctes = new StringBuilder(
-        s"e0 AS MATERIALIZED ($e0),\n" +
+        s"e0 AS MATERIALIZED ($coPurchaseDuckE0),\n" +
           "g0 AS MATERIALIZED (SELECT src, dst FROM e0 " +
           "UNION ALL SELECT dst AS src, src AS dst FROM e0)")
       for (i <- 1 to 8) {
