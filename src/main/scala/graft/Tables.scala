@@ -114,6 +114,15 @@ object Tables {
     * the scan (PushDownPredicates handles RepartitionOperation), so
     * pruning/pushdown is unaffected.
     *
+    * That pushdown also decides where a generator's input runs. For the
+    * trigram paths (q_text_langid_ngram, EvalOps) Spark's
+    * InferFiltersFromGenerate adds `size(array_distinct(char_ngrams(...)))
+    * > 0` above the `explode`, and that filter is pushed below the
+    * round-robin exchange: `char_ngrams` runs once per row in the
+    * single-task scan stage, as the path's physical plan shows, and again
+    * after the exchange for the `explode`. The exchange spreads the explode
+    * and everything after it, not all of the trigram work.
+    *
     * Measured guidance (sf0.1, 32 cpus): this pays for itself only where
     * scan-adjacent per-row compute dominates (trigram extraction ~6×,
     * md5-per-token ~25%); for queries whose cost sits in their post-shuffle

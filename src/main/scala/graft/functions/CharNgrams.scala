@@ -11,14 +11,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * `char_ngrams(s, n)` ≡ `transform(sequence(1, length(s) - n + 1),
   *                                  i -> substring(s, i, n))`
   * (and DuckDB's `list_transform(generate_series(...), ...)` twin) but as
-  * one tight codegen loop over UTF8 code points — no per-element lambda
-  * dispatch, no sequence array allocation. `substringSQL` slicing matches
-  * SQL `substring` for multi-byte code points, so results are identical to
-  * the lambda formulation on any input. Strings shorter than n yield an
-  * empty array; n must be a foldable positive integer.
+  * one pass over the UTF-8 bytes — no per-element lambda dispatch, no
+  * sequence array allocation. The pass records each code point's byte
+  * offset once, with the same `numBytesForFirstByte` boundaries SQL
+  * `substring` uses, then copies every n-code-point slice into its own
+  * bytes, so results are identical to the lambda formulation on any valid
+  * UTF-8 input and a string of L characters costs O(L·n). (A per-gram
+  * `substringSQL` re-walks the code points from byte 0 up to the gram's
+  * start on every call: O(L) per gram, O(L²) per string.) Strings shorter
+  * than n yield an empty array; n must be a foldable positive integer.
   *
   * This is the hot kernel of the char-ngram text operators
-  * (q_text_langid_ngram): corpus-linear substring extraction.
+  * (q_text_langid_ngram, the EvalOps classifier and ranking metrics).
   */
 case class CharNgrams(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -39,38 +43,42 @@ case class CharNgrams(left: Expression, right: Expression)
 
   @transient private lazy val n: Int = right.eval().asInstanceOf[Int]
 
-  override def nullSafeEval(s: Any, nv: Any): Any = {
-    val str = s.asInstanceOf[UTF8String]
-    val total = str.numChars() - n + 1
-    if (total <= 0) new GenericArrayData(Array.empty[Any])
-    else {
-      val out = new Array[Any](total)
-      var i = 0
-      while (i < total) {
-        out(i) = str.substringSQL(i + 1, n)
-        i += 1
-      }
-      new GenericArrayData(out)
-    }
-  }
+  override def nullSafeEval(s: Any, nv: Any): Any =
+    CharNgrams.grams(s.asInstanceOf[UTF8String], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, _) => {
-      val i = ctx.freshName("i")
-      val total = ctx.freshName("total")
-      val arr = ctx.freshName("arr")
-      s"""
-         |int $total = $s.numChars() - $n + 1;
-         |if ($total < 0) $total = 0;
-         |UTF8String[] $arr = new UTF8String[$total];
-         |for (int $i = 0; $i < $total; $i++) {
-         |  $arr[$i] = $s.substringSQL($i + 1, $n);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (s, _) =>
+      s"${ev.value} = ${classOf[CharNgrams].getName}.grams($s, $n);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CharNgrams =
     copy(left = newLeft, right = newRight)
+}
+
+object CharNgrams {
+
+  /** The one-pass kernel both evaluation paths call: the n-code-point
+    * slices of `s` in order. `starts(k)` is the byte offset of code point
+    * k and `starts(chars)` the end, so gram k is the bytes
+    * [starts(k), starts(k + n)). */
+  def grams(s: UTF8String, n: Int): GenericArrayData = {
+    val bytes = s.numBytes()
+    val starts = new Array[Int](bytes + 1)
+    var i = 0
+    var chars = 0
+    while (i < bytes) {
+      starts(chars) = i
+      i += UTF8String.numBytesForFirstByte(s.getByte(i))
+      chars += 1
+    }
+    // a truncated trailing code point ends at the last byte, not past it
+    starts(chars) = math.min(i, bytes)
+    val out = new Array[Any](math.max(chars - n + 1, 0))
+    var k = 0
+    while (k < out.length) {
+      out(k) = s.copyUTF8String(starts(k), starts(k + n) - 1)
+      k += 1
+    }
+    new GenericArrayData(out)
+  }
 }

@@ -17,10 +17,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.vecDotDescriptor)
-    ext.injectFunction(GraftFunctions.maskAndCountDescriptor)
-    ext.injectFunction(GraftFunctions.charNgramsDescriptor)
-    ext.injectFunction(GraftFunctions.asofTieDescriptor)
+    GraftFunctions.descriptors.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinBandRule)
     // SQL ASOF JOIN: keyword accepted by the parser, marked join rewritten
@@ -71,18 +68,22 @@ object GraftFunctions {
     new ExpressionInfo(classOf[graft.plans.AsofTie].getName, "asof_tie"),
     asofTieBuilder _)
 
+  /** Every function graft installs, by either route. */
+  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(vecDotDescriptor, maskAndCountDescriptor, charNgramsDescriptor, asofTieDescriptor)
+
   /** The one idempotent install into a live session: the four functions,
-    * the Levenshtein band rewrite and the as-of join strategy. */
+    * the Levenshtein band rewrite and the as-of join strategy. A function
+    * whose registry entry already holds graft's builder is left alone, so
+    * a repeat call re-registers nothing (and logs no "replaced a
+    * previously registered function" warning). */
   def register(spark: SparkSession): Unit = {
     GraftBridge.addOptimization(spark, graft.plans.LevenshteinBandRule)
     GraftBridge.addStrategy(spark, graft.plans.AsOfJoinStrategy)
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("vec_dot", builder, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("mask_and_count", macBuilder, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("char_ngrams", ngramsBuilder, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("asof_tie", asofTieBuilder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    descriptors.foreach { case (id, _, build) =>
+      if (!registry.lookupFunctionBuilder(id).contains(build))
+        registry.createOrReplaceTempFunction(id.funcName, build, "built-in")
+    }
   }
 }

@@ -437,8 +437,9 @@ object EvalOps {
   private val memo = scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
   private def base(s: SparkSession, sf: String): DataFrame =
     memo.getOrElseUpdate((s, sf), {
-      // documentsPar: the trigram Generate is compute-bound on one input
-      // split — same rationale as q_text_langid_ngram (TextOps).
+      // documentsPar: the corpus is one input split; the exchange spreads
+      // the trigram explode, not every char_ngrams call — same as
+      // q_text_langid_ngram (TextOps), see Tables.documentsPar.
       Tables.documentsPar(s, sf).createOrReplaceTempView("documents")
       val full = ctes(
         grams = "array_distinct(char_ngrams(lower(text), 3))",

@@ -1135,10 +1135,13 @@ object TextOps {
     * within a band). Cost: pairs only within bounded blocks over the
     * deterministic ≤5000-doc verification sample (the docSampleSub
     * guard shared with the exact-Jaccard family); the production
-    * sub-quadratic route stays the banded LSH path. */
-  private def editDistSql(idiv: String, hint: String = ""): String =
+    * sub-quadratic route stays the banded LSH path. `spread` and
+    * `gather` are Spark-only hints (empty for the DuckDB twin, whose text
+    * they leave unchanged): `spread` repartitions the sample ahead of the
+    * pair join, `gather` puts the final sort on one partition. */
+  private def editDistSql(idiv: String, spread: String = "", gather: String = ""): String =
     s"""WITH d AS ($docSampleSub),
-       |b AS (SELECT $hint doc_id, lang, text, n_chars, n_chars $idiv 20 AS band
+       |b AS (SELECT $spread doc_id, lang, text, n_chars, n_chars $idiv 20 AS band
        |      FROM d),
        |p AS (SELECT a.lang AS lang, a.doc_id AS doc_id,
        |        b2.doc_id AS doc_id_b,
@@ -1147,7 +1150,7 @@ object TextOps {
        |        ON a.lang = b2.lang AND a.band = b2.band
        |       AND a.doc_id < b2.doc_id
        |       AND abs(a.n_chars - b2.n_chars) <= 10)
-       |SELECT lang, doc_id, doc_id_b, dist FROM p WHERE dist <= 10
+       |SELECT ${gather}lang, doc_id, doc_id_b, dist FROM p WHERE dist <= 10
        |ORDER BY lang, doc_id, doc_id_b""".stripMargin
 
   /** Hashing-trick bag-of-words features: every token maps to one of 64
@@ -2659,9 +2662,13 @@ object TextOps {
       // parallelism, never a local constant; the relation it spreads is
       // the bounded verification sample, so the exchange is O(5000 rows)
       // at any corpus size. Measured 262 s → 0.7 s isolated (plans/r14).
+      // The result (61 rows at sf0.1) is sorted on one partition: a range
+      // exchange would sample its bounds with a job that re-runs the whole
+      // pair join.
       Tables.documents(s, sf).createOrReplaceTempView("documents")
       val p = s.sparkContext.defaultParallelism
-      s.sql(editDistSql(idiv = "DIV", hint = s"/*+ REPARTITION($p, doc_id) */"))
+      s.sql(editDistSql(idiv = "DIV", spread = s"/*+ REPARTITION($p, doc_id) */",
+        gather = "/*+ REPARTITION(1) */ "))
     }),
 
     "q_graph_neighbor_jaccard" -> ((s, sf) => {
@@ -3260,10 +3267,12 @@ object TextOps {
     // supervised n-gram language ID with no driver-side state — profile
     // build and scoring are both distributed joins.
     "q_text_langid_ngram" -> ((s, sf) => {
-      // documentsPar: the trigram Generate is compute-bound (µs/row × 1.5M
-      // rows) and the corpus is one input split — see Tables.documentsPar.
+      // documentsPar: the corpus is one input split, so the round-robin
+      // exchange spreads the trigram explode (1.5M rows) and all that
+      // follows across cores. char_ngrams itself still runs once per row
+      // in the one-task scan stage too — see Tables.documentsPar.
       Tables.documentsPar(s, sf).createOrReplaceTempView("documents")
-      // char_ngrams: custom codegen kernel, identical output to the
+      // char_ngrams: custom one-pass codegen kernel, identical output to the
       // transform(sequence(...), i -> substring(...)) lambda (parity test
       // in RobustnessSpec) without per-element interpreted dispatch.
       //

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.SpecBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,19 +18,6 @@ class CatalogReuseSpec extends AnyFunSuite with SparkSessionTest {
 
   private val tables = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Spark jobs submitted while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    SpecBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { body; SpecBus.drain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
 
   private def sqlCount(sf: String, table: String): Long =
     Main.run(spark, sf, Seq("sql", s"SELECT count(*) FROM $table")).head().getLong(0)

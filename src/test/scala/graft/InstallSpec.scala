@@ -1,6 +1,8 @@
 package graft
 
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The install point. Graft's functions, its optimizer rule and its
@@ -35,6 +37,23 @@ class InstallSpec extends AnyFunSuite with SparkSessionTest {
     val optimized = SparkEntry.queries("q_dedup_editdist")(bare(), sf0001)
       .queryExecution.optimizedPlan.toString
     assert(optimized.contains("abs((length("), s"no band prefilter:\n$optimized")
+  }
+
+  test("a second register re-registers no function") {
+    val s = bare()
+    val registry = s.sessionState.functionRegistry
+    val ids = Seq("vec_dot", "mask_and_count", "char_ngrams", "asof_tie")
+      .map(FunctionIdentifier(_))
+    def entries = ids.map(id =>
+      (registry.lookupFunctionBuilder(id).get, registry.lookupFunction(id).get))
+    GraftFunctions.register(s)
+    val first = entries
+    GraftFunctions.register(s)
+    // a re-registration would store a fresh ExpressionInfo even for the
+    // same builder
+    first.zip(entries).zip(ids).foreach { case (((b0, i0), (b1, i1)), id) =>
+      assert((b0 eq b1) && (i0 eq i1), s"$id was re-registered")
+    }
   }
 
   test("GraftSession.local's conf is the conf the benchmark harness mirrors") {

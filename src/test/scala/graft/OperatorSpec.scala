@@ -2698,6 +2698,13 @@ class OperatorSpec extends AnyFunSuite with SparkSessionTest
     }
   }
 
+  test("q_dedup_editdist runs its pair join once: 4 jobs at sf0.001") {
+    // the sorted result is gathered on one partition, so no range-bounds
+    // sampling job re-runs the banded self-join (5 jobs with a range sort)
+    Tables.documents(spark, sf0001)
+    assert(jobsDuring(SparkEntry.queries("q_dedup_editdist")(spark, sf0001).collect()) == 4)
+  }
+
   test("eval family matches an independent scala classifier replay") {
     // Full reimplementation of EvalOps' trigram-profile classifier and all
     // six metrics, collection-side, against the sf0.001 corpus.

@@ -1,7 +1,14 @@
 package graft
 
+import graft.functions.CharNgrams
 import graft.operators.Skew
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Edge-case robustness: nulls, empties, skew — the cases the corpus lacks
@@ -78,15 +85,34 @@ class RobustnessSpec extends AnyFunSuite with SparkSessionTest {
     import spark.implicits._
     val df = Seq("hello world", "ab", "abc", "", "héllo wörld ünïcode",
       "日本語のテキスト", "x").toDF("s")
-    // (sequence(1, 0) is a DESCENDING range in Spark, so the lambda twin
-    // needs the short-string guard explicitly — char_ngrams builds it in)
-    val rows = df.selectExpr(
-      "char_ngrams(s, 3) AS fast",
-      """CASE WHEN length(s) < 3 THEN array()
-        |ELSE transform(sequence(1, length(s) - 2), i -> substring(s, i, 3)) END AS slow""".stripMargin)
-      .collect()
-    rows.foreach { r =>
-      assert(r.getSeq[String](0) == r.getSeq[String](1), s"mismatch on row $r")
+    // 4-byte code points among ASCII, and a 10 000-character string
+    val long = Iterator.continually(Seq("a", "é", "日", "😀", " ", "x")).flatten
+      .take(10000).mkString
+    val all = df.union(Seq("a😀b😀😀c 👍🏽 ok", "😀", "😀😀", long).toDF("s"))
+    def strings(a: ArrayData): Seq[String] =
+      a.toArray[UTF8String](StringType).map(_.toString).toSeq
+    for (n <- Seq(1, 2, 3, 5)) {
+      // (sequence(1, 0) is a DESCENDING range in Spark, so the lambda twin
+      // needs the short-string guard explicitly — char_ngrams builds it in)
+      val rows = all.selectExpr("s",
+        s"char_ngrams(s, $n) AS fast",
+        s"""CASE WHEN length(s) < $n THEN array()
+           |ELSE transform(sequence(1, length(s) - ${n - 1}), i -> substring(s, i, $n))
+           |END AS slow""".stripMargin)
+        .collect()
+      // both evaluation paths of the kernel, outside any plan
+      val generated = GenerateUnsafeProjection.generate(
+        Seq(CharNgrams(BoundReference(0, StringType, nullable = false), Literal(n))))
+      rows.foreach { r =>
+        val (str, slow) = (r.getString(0), r.getSeq[String](2))
+        val at = s"n = $n, s = ${str.take(40)} (${str.length} chars)"
+        assert(r.getSeq[String](1) == slow, s"query mismatch at $at")
+        val interpreted = CharNgrams(Literal(str), Literal(n)).eval()
+        assert(strings(interpreted.asInstanceOf[ArrayData]) == slow,
+          s"interpreted mismatch at $at")
+        val compiled = generated(InternalRow(UTF8String.fromString(str))).getArray(0)
+        assert(strings(compiled) == slow, s"codegen mismatch at $at")
+      }
     }
     // n larger than the string → empty, not negative-sized
     assert(df.selectExpr("size(char_ngrams(s, 40))").collect().forall(_.getInt(0) == 0))
