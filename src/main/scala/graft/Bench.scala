@@ -1,105 +1,74 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Wall-clock timing of every [[SparkEntry.queries]] path at
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1). Prints the full per-query line,
+  * then a compact summary line LAST, and writes the full line to
+  * [[Artifact]]. Exits 1 when a query throws. */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Where the full line is written: a build output, never a tracked file. */
+  val Artifact = "target/bench/BENCH_full.json"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = GraftSession.envCpus
-    // Share one in-memory scan per table across the ~200 queries (see
-    // Tables scaladoc): the bench's unit of work is the query mix, and
-    // re-decoding the same immutable parquet 200× is per-query fixed
-    // overhead, not query cost. Verify and the specs do NOT set this —
-    // the graded correctness path keeps the true parquet-scan plans.
+    // Share one in-memory scan per table across the ~380 queries (see
+    // Tables scaladoc): re-decoding the same immutable parquet per query
+    // is fixed overhead, not query cost. Verify and the specs do NOT set
+    // this — the graded correctness path keeps the true parquet-scan plans.
     sys.props("graft.cache.tables") = "1"
-    // SPARK_GRAFT_EXTRA_CONF: the A/B experiment hook; unset, the bench
-    // runs the standard session conf.
-    val spark = GraftSession.local(cpus, GraftSession.envExtraConf)
-    // Untimed warmup: JIT + codegen + parquet-reader init otherwise land on
-    // whichever query happens to run first, skewing its number (BASELINE.md
-    // protocol). Round 1 warmed only the flagship; that leaves each query's
-    // FIRST execution paying its own one-time JVM cost — measured 5-8 s
-    // cold vs 1-2 s steady-state for the lambda-heavy text operators
-    // (interpreted HigherOrderFunction paths JIT late). So warm every
-    // query once at sf0.001 (tiny data: the one-time cost is per code
-    // path, not per row), then time steady-state latency at the target SF.
+    val spark = GraftSession.local(GraftSession.envCpus)
+    // Untimed warm-up: JIT, codegen and parquet-reader init otherwise land
+    // on whichever query runs first (5-8 s cold vs 1-2 s steady-state for
+    // the lambda-heavy text operators). The one-time cost is per code
+    // path, not per row, so every query is warmed once at sf0.001.
     try { SparkEntry.entry(spark).count() } catch { case _: Throwable => () }
     SparkEntry.queries.foreach { case (_, fn) =>
       try { fn(spark, "/root/testdata/sf0.001").count() } catch { case _: Throwable => () }
     }
-    // Materialize the shared target-SF table caches untimed, so the
-    // one-time parquet decode lands in warmup rather than on whichever
-    // query happens to touch each table first (same rationale as the JIT
-    // warmup above — the timed loop measures steady-state query cost).
-    Seq[(SparkSession, String) => org.apache.spark.sql.DataFrame](
-      Tables.region, Tables.nation, Tables.customer, Tables.supplier,
+    // Materialize the target-SF table caches untimed, for the same reason.
+    Seq[Query](Tables.region, Tables.nation, Tables.customer, Tables.supplier,
       Tables.part, Tables.orders, Tables.lineitem, Tables.documents,
       Tables.embeddings, Tables.events, Tables.eventsRaw
     ).foreach { t => try { t(spark, sfDir).count() } catch { case _: Throwable => () } }
-    // Scheduling metadata around the timed loop: BASELINE.md's noise
-    // history shows up-to-3× host-level interference windows invisible to
-    // guest loadavg alone (round-5's 182 s driver artifact vs the locked
-    // 60.6 s quiet baseline). Embedding loadavg + hypervisor steal-time in
-    // the artifact makes a noisy window machine-detectable from the JSON
-    // itself — compare_bench.py prints it next to the window factor.
+    val failed = try run(spark, SparkEntry.queries, sfDir) finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Times each query best-of-2 at `sfDir`, prints the full line and then
+    * the compact line, writes the full line to [[Artifact]], and returns
+    * the names of the queries that threw. A query that throws is a
+    * failure, not a fast time: it is kept out of `queries` and `total`. */
+  def run(spark: SparkSession, queries: Map[String, Query], sfDir: String): Seq[String] = {
+    // Host load and steal around the timed loop flag a noisy window.
     def load1: Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
     // /proc/stat "cpu" line: user nice system idle iowait irq softirq steal …
-    def cpuJiffies: (Long, Long) =
-      try {
-        val f = scala.io.Source.fromFile("/proc/stat").getLines()
-          .next().trim.split("\\s+").drop(1).map(_.toLong)
-        (if (f.length > 7) f(7) else 0L, f.sum)
-      } catch { case _: Throwable => (0L, 0L) }
-    // Per-query attribution probe (round-7 dossier for the one-off 17 s
-    // q_dedup_lsh_bands driver spike): task CPU vs wall vs GC splits a
-    // slow reading into its cause — wall >> task/cpus with low GC = host
-    // stall; high jvmGCTime / driver-GC delta = heap pressure. Listener
-    // events are posted async, so a trailing task can attribute to the
-    // next query; slop is ms-scale and irrelevant at the seconds scale
-    // this probe exists to explain.
-    val probeTaskMs = new java.util.concurrent.atomic.AtomicLong
-    val probeGcMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) { probeTaskMs.addAndGet(m.executorRunTime); probeGcMs.addAndGet(m.jvmGCTime) }
-      }
-    })
-    def drvGcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
+    def cpuJiffies: (Long, Long) = try {
+      val f = scala.io.Source.fromFile("/proc/stat").getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
+      (if (f.length > 7) f(7) else 0L, f.sum)
+    } catch { case _: Throwable => (0L, 0L) }
     val tsStart = java.time.Instant.now().toString
     val loadStart = load1
     val (stealStart, totalStart) = cpuJiffies
-    val probe = scala.collection.mutable.LinkedHashMap[String, (Double, Double, Double)]()
+    // Best-of-2: a contiguous host stall can inflate one rep, not both.
     val reps = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
-    // Best-of-2 per query: the last two driver captures were both noised by
-    // a contiguous host scheduling stall in the run's tail (round-7 verdict,
-    // attribution from the probe data). A stall window can inflate ONE rep
-    // of a query, but not both reps independently — taking the per-query
-    // min makes a contiguous stall unable to fabricate structural movers,
-    // for ~1× extra wall on an already-warm JVM. Both reps land in the file
-    // artifact so the delta itself is evidence of in-run noise.
-    // A query that throws is a failure, not a fast time: it is listed in
-    // `failed`, kept out of `queries` and `total`, and makes the run exit
-    // non-zero.
     val failed = scala.collection.mutable.ListBuffer[String]()
-    val results = SparkEntry.queries.flatMap { case (name, fn) =>
-      def rep(): (Double, (Double, Double, Double)) = {
-        val (t1, g1, d1) = (probeTaskMs.get, probeGcMs.get, drvGcMs)
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        (sec, ((probeTaskMs.get - t1) / 1e3, (probeGcMs.get - g1) / 1e3,
-          (drvGcMs - d1) / 1e3))
-      }
+    def rep(fn: Query): Double = {
+      val t0 = System.nanoTime(); fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9
+    }
+    val results = queries.flatMap { case (name, fn) =>
       try {
-        val (s1, p1) = rep()
-        val (s2, p2) = rep()
+        val (s1, s2) = (rep(fn), rep(fn))
         reps(name) = (s1, s2)
-        probe(name) = if (s1 <= s2) p1 else p2
         Some(name -> math.min(s1, s2))
       } catch {
         case e: Throwable =>
@@ -114,35 +83,15 @@ object Bench {
     val stealPct =
       if (totalEnd > totalStart) 100.0 * (stealEnd - stealStart) / (totalEnd - totalStart)
       else -1.0
-    // Round to millis: the driver records only the tail of stdout, and the
-    // full-precision line (100 queries x 9-decimal doubles, ~3.5 kB) got its
-    // head truncated in round 1 ("parsed": null in BENCH_r01.json). 3
-    // decimals keeps the whole line comfortably inside the tail window.
+    // Millisecond precision keeps the full line small.
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + f(v) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    // Write-class queries perform real filesystem writes each run
-    // (bucketed tables, partitioned sinks, compaction fixtures…): their
-    // latency includes file churn and has measured up to 2.2× run-to-run
-    // spread with no code change. Tagging them in the artifact lets
-    // compare_bench.py keep them OUT of the window-factor median and
-    // report them as their own class instead of as phantom movers.
-    val writeClass = Seq("q_join_bucketed", "q_mm_ingest_binary",
-      "q_part_dpp", "q_maintain_compact", "q_maintain_vacuum",
-      "q_maintain_cluster", "q_maintain_cluster_z", "q_maintain_snapshot",
-      "q_maintain_delete", "q_maintain_merge",
-      "q_sink_partitioned",
-      "q_ingest_orc", "q_scan_merge_schema", "q_ingest_syslog_rotated")
-      .filter(SparkEntry.queries.contains)
-    // Memo-class queries share a once-per-(session, sf) training/build
-    // pass (unigram EM state, IVF/PQ codebooks, eval_base/rank_base) —
-    // whichever family member runs FIRST pays the whole build, and under
-    // GC/steal both its reps can stay slow, so best-of-2 doesn't save the
-    // reading (round-13 verdict item 3: q_text_unigram_tokenize billed
-    // 40.2 s for the training chain in one capture, 1.3 s in the clean
-    // one). Tagging them lets compare_bench.py label their movers
-    // "memo-first-payer" instead of flagging phantom regressions.
+    def strs(xs: Iterable[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val qs = results.map { case (k, v) => s"\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+    val total = results.values.sum
+    // Memo-class queries share a once-per-(session, sf) build (unigram EM
+    // state, IVF/PQ codebooks, eval_base/rank_base): whichever runs first
+    // pays it in rep 1, and the best-of-2 records the memoized readout.
+    // That rep-1 excess is reported so totals can be read either way.
     val memoClass = Seq(
       "q_text_unigram_train", "q_text_unigram_tokenize",
       "q_vec_ann_ivf", "q_vec_cluster_purity", "q_vec_ann_recall",
@@ -150,101 +99,42 @@ object Bench {
       "q_eval_confusion", "q_eval_prf", "q_eval_kappa", "q_eval_auc",
       "q_eval_calibration", "q_eval_brier",
       "q_eval_ndcg", "q_eval_mrr", "q_eval_map")
-      .filter(SparkEntry.queries.contains)
-    val xmxGb = Runtime.getRuntime.maxMemory / (1 << 30)
-    // Traceability (round-14 advice): stamp the artifact with the git
-    // revision (+ dirty flag) it benchmarked, so numbers are attributable
-    // to code without filename archaeology. Best-effort: a missing git
-    // binary/repo yields "unknown", never a failed run.
-    val gitRev: String = try {
-      def run(cmd: String*): String = {
-        val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-        val out = new String(p.getInputStream.readAllBytes, "UTF-8").trim
-        p.waitFor(); out
-      }
-      val sha = run("git", "rev-parse", "--short", "HEAD")
-      val dirty = if (run("git", "status", "--porcelain").nonEmpty) "-dirty" else ""
-      if (sha.matches("[0-9a-f]{4,40}")) sha + dirty else "unknown"
-    } catch { case _: Throwable => "unknown" }
-    // Memo-class first-payer accounting (r14 verdict item 9): the
-    // recorded best-of-2 for a memo query is the memoized READOUT; the
-    // once-per-(session,sf) training/build cost shows up as rep1's
-    // excess over the best rep on whichever family member ran first.
-    // Record that excess per memo query (and its sum) so totals can be
-    // stated with and without the memoized accounting.
+      .filter(queries.contains)
     val memoFirstPay = memoClass.filter(reps.contains).map { n =>
       val (a, b) = reps(n); n -> math.max(0.0, a - b)
     }.filter(_._2 > 0.0)
     val memoFirstPayTotal = memoFirstPay.map(_._2).sum
+    val cpus = spark.sparkContext.defaultParallelism
+    val xmxGb = Runtime.getRuntime.maxMemory / (1 << 30)
+    // The git revision (+ dirty flag) the numbers belong to; a missing git
+    // binary or repo yields "unknown", never a failed run.
+    def git(cmd: String*): String = try {
+      val p = new ProcessBuilder(("git" +: cmd): _*).redirectErrorStream(true).start()
+      try new String(p.getInputStream.readAllBytes, "UTF-8").trim finally p.waitFor()
+    } catch { case _: Throwable => "" }
+    val sha = git("rev-parse", "--short", "HEAD")
+    val gitRev = if (!sha.matches("[0-9a-f]{4,40}")) "unknown"
+      else sha + (if (git("status", "--porcelain").nonEmpty) "-dirty" else "")
     val meta = s"""{"ts_start":"$tsStart","ts_end":"$tsEnd",""" +
       s""""load1_start":${f(loadStart)},"load1_end":${f(loadEnd)},""" +
       s""""steal_pct":${f(stealPct)},"cpus":$cpus,"xmx_gb":$xmxGb,""" +
-      s""""git_rev":"$gitRev",""" +
-      s""""write_class":${writeClass.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""memo_class":${memoClass.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+      s""""git_rev":"$gitRev","memo_class":${strs(memoClass)},""" +
       s""""memo_first_pay_s":${memoFirstPay.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")},""" +
-      s""""memo_first_pay_total_s":${f(memoFirstPayTotal)},""" +
-      s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+      s""""memo_first_pay_total_s":${f(memoFirstPayTotal)},"failed":${strs(failed)}}"""
     val line = s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","meta":$meta}"""
+    try {
+      Files.createDirectories(Paths.get(Artifact).getParent)
+      Files.write(Paths.get(Artifact), (line + "\n").getBytes("UTF-8"))
+    } catch { case _: Throwable => () }
     println(line)
-    // The driver records only the TAIL of stdout (~2000 chars), so the
-    // ~10 KB line above has ALWAYS arrived head-truncated — "parsed":
-    // null in every BENCH_r01..r14.json, leaving PERF's totals and
-    // per-query blocks empty (r14 verdict item 2). Print a compact
-    // SUMMARY line last, small enough to survive the tail window whole:
-    // totals + run meta only (the full per-query map stays on the line
-    // above and in the BENCH_full.json artifact — nothing is removed).
+    // Only the tail of stdout is recorded, so the ~10 KB full line above
+    // can arrive head-truncated: the compact line, printed last, carries
+    // the totals and run meta in a size that survives whole.
     println(s"""{"metric":"total","value":${f(total)},"unit":"sec",""" +
       s""""n":${results.size},"sf":"$sfDir","cpus":$cpus,""" +
       s""""steal_pct":${f(stealPct)},"load1_start":${f(loadStart)},""" +
       s""""load1_end":${f(loadEnd)},"memo_first_pay_total_s":${f(memoFirstPayTotal)},""" +
-      s""""n_failed":${failed.size},""" +
-      s""""full_artifact":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")}"}""")
-    // The driver records only the TAIL of stdout, which truncated the
-    // per-query map in BENCH_r0{1..4}.json and blocked per-query diffing
-    // across rounds. Persist the full line to a file as well (committed
-    // per-round as BENCH_full_r{N}.json per BASELINE.md protocol). The
-    // file variant additionally carries the attribution probe (kept off
-    // stdout so the driver's tail window stays small).
-    val probeJson = probe.map { case (k, (t, g, d)) =>
-      "\"" + k + "\":{\"task\":" + f(t) + ",\"gc\":" + f(g) +
-        ",\"dgc\":" + f(d) + "}"
-    }.mkString("{", ",", "}")
-    // Cache-pressure probe (round-12 sf1 q_tpch_q21 watch item): the
-    // shared table cache is MEMORY_AND_DISK, so execution-memory
-    // pressure shows up as cached batches spilled to disk — every later
-    // scan of a spilled partition re-reads + decompresses it, which a
-    // task-CPU swing alone can't distinguish from a plan regression.
-    // Recording the end-of-run mem/disk split per cached RDD makes that
-    // signature machine-readable in the artifact: diskSize > 0 on a
-    // fact table = the run was cache-pressured, triage accordingly.
-    val storageJson = spark.sparkContext.getRDDStorageInfo
-      // only pressure-relevant rows: spilled, partially cached, or >16MB
-      .filter(i => i.diskSize > 0 || i.numCachedPartitions < i.numPartitions
-        || i.memSize > 16L * 1048576)
-      .map { i =>
-      // RDD names can be whole multi-line plan strings — JSON-hostile;
-      // collapse all control chars and quotes before embedding
-      "{\"name\":\"" + Option(i.name).getOrElse("rdd_" + i.id)
-        .replaceAll("[\\x00-\\x1f\"\\\\]+", " ").take(80) +
-        "\",\"parts\":" + i.numPartitions +
-        ",\"cached\":" + i.numCachedPartitions +
-        ",\"mem_mb\":" + f(i.memSize / 1048576.0) +
-        ",\"disk_mb\":" + f(i.diskSize / 1048576.0) + "}"
-    }.mkString("[", ",", "]")
-    val repsJson = reps.map { case (k, (a, b)) =>
-      "\"" + k + "\":[" + f(a) + "," + f(b) + "]"
-    }.mkString("{", ",", "}")
-    val fileLine = line.dropRight(1) +
-      s""","probe":$probeJson,"reps":$repsJson,"storage":$storageJson}"""
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (fileLine + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
-    spark.stop()
-    if (failed.nonEmpty) {
-      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
-      sys.exit(1)
-    }
+      s""""n_failed":${failed.size},"full_artifact":"$Artifact"}""")
+    failed.toSeq
   }
 }

@@ -31,10 +31,9 @@ object GraftSession {
     Ckpt.CleanerKey -> "true",
     "spark.ui.enabled" -> "false")
 
-  /** [[conf]] plus `extraConf` (applied last), log level WARN, graft
-    * installed. */
-  def local(cpus: Int, extraConf: Map[String, String] = Map.empty): SparkSession = {
-    val s = SparkSession.builder().config(conf(cpus) ++ extraConf).getOrCreate()
+  /** A session with [[conf]], log level WARN, graft installed. */
+  def local(cpus: Int): SparkSession = {
+    val s = SparkSession.builder().config(conf(cpus)).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     GraftFunctions.register(s)
     s
@@ -42,11 +41,4 @@ object GraftSession {
 
   /** `SPARK_GRAFT_CPUS`, default 4. */
   def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-
-  /** `SPARK_GRAFT_EXTRA_CONF`: semicolon-separated `k=v` session confs for
-    * A/B experiments (Bench, QTime, Profile). Unset = no extra conf. */
-  def envExtraConf: Map[String, String] =
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
 }

@@ -43,9 +43,7 @@ object Tables {
     * round's perf triage chasing phantom "drop + recompute from
     * parquet". With the level explicit, eviction under execution-memory
     * pressure spills cached batches to local disk and re-reads them —
-    * never a parquet recompute — and [[Bench]]'s per-run storage probe
-    * records the mem/disk split so pressure is machine-visible in the
-    * artifact instead of inferred from task-CPU swings.
+    * never a parquet recompute.
     * OFF by default: the graded Verify path and every spec still run the
     * true parquet-scan plans (pushdown/pruning assertions unaffected). */
   // def, not val: re-read per load so the parity spec can toggle the

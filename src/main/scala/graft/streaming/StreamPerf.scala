@@ -19,7 +19,7 @@ import java.util.Locale
   * deployment's state fits its executors.
   *
   * Output: one STREAM_PERF.json with a per-check block + corpus meta.
-  * compare_bench-style regression reading: rows_per_s is the headline;
+  * Reading a regression: rows_per_s is the headline;
   * state_rows is the leak canary (it must track |keys|, not |events| —
   * e.g. dau's dedup state is bounded by user-days, and a regression
   * that loses the watermark would show here as unbounded growth at

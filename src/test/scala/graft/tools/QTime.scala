@@ -1,28 +1,30 @@
 package graft
 
-/** Scratch: steady-state timing for a subset of queries (warm twice at
-  * sf0.001 like Bench, then time N reps at the target SF).
-  *
-  * Env knobs for A/B experiments (r14 opt round):
-  *   SPARK_GRAFT_CPUS       master/core count (default 4, like Bench)
-  *   SPARK_GRAFT_EXTRA_CONF semicolon-separated k=v session confs
-  *   SPARK_GRAFT_CACHE_TABLES=1 to match Bench's shared-scan setup
-  * Prints per-rep wall plus the summed task/GC time attribution the
-  * Bench probe uses, so serial stages (task≈wall) are visible.
-  */
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+
+/** Steady-state timing for a subset of queries: warm each once at
+  * sf0.001, then time N reps at the target SF over true parquet scans (as
+  * Verify and the benchmark harness read them). Per rep it prints wall,
+  * the build (DataFrame construction + analysis) / plan (physical plan) /
+  * exec (count) split, stages and tasks, and the summed task and GC time,
+  * so serial stages (task ≈ wall) are visible.
+  * Usage: `Test/runMain graft.QTime <sfDir> <reps> <name...>`
+  * (`SPARK_GRAFT_CPUS` sets the core count, default 4). */
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val reps = args(1).toInt; val names = args.drop(2)
-    val spark = GraftSession.local(GraftSession.envCpus, GraftSession.envExtraConf)
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    val nTasks = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+    val spark = GraftSession.local(GraftSession.envCpus)
+    val Seq(taskMs, gcMs, nTasks, nStages) = Seq.fill(4)(new AtomicLong)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
         if (m != null) { taskMs.addAndGet(m.executorRunTime); gcMs.addAndGet(m.jvmGCTime) }
         nTasks.incrementAndGet()
       }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = nStages.incrementAndGet()
     })
     names.foreach { n =>
       try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
@@ -30,11 +32,20 @@ object QTime {
     }
     names.foreach { n =>
       val ts = (1 to reps).map { _ =>
-        val (t1, g1, k1) = (taskMs.get, gcMs.get, nTasks.get)
+        SpecBus.drain(spark.sparkContext)
+        val (t1, g1, k1, s1) = (taskMs.get, gcMs.get, nTasks.get, nStages.get)
         val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        f"$sec%.2f(task ${(taskMs.get - t1) / 1e3}%.1f gc ${(gcMs.get - g1) / 1e3}%.1f tasks ${nTasks.get - k1})"
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        val tBuild = System.nanoTime()
+        df.queryExecution.executedPlan
+        val tPlan = System.nanoTime()
+        df.count()
+        val tExec = System.nanoTime()
+        SpecBus.drain(spark.sparkContext)
+        def ms(a: Long, b: Long) = (b - a) / 1e6
+        f"${(tExec - t0) / 1e9}%.2f(build ${ms(t0, tBuild)}%.0f plan ${ms(tBuild, tPlan)}%.0f " +
+          f"exec ${ms(tPlan, tExec)}%.0f ms stages ${nStages.get - s1} tasks ${nTasks.get - k1} " +
+          f"task ${(taskMs.get - t1) / 1e3}%.1f gc ${(gcMs.get - g1) / 1e3}%.1f)"
       }
       println(s"QTIME $n ${ts.mkString(" ")}")
     }
